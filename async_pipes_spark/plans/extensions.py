@@ -2729,7 +2729,6 @@ def s32_stream_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ...and the maintained view IS the direct rollup of the resolved
     # table (engine-side parity, asserted in-query — the oracle then
     # re-derives the same rollup from the raw events in DuckDB)
-    from async_pipes_spark import diag
     from async_pipes_spark.sources.sinks import read_table
 
     direct = {
@@ -2743,19 +2742,6 @@ def s32_stream_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
     got = {tuple(r) for r in out_rows}
-    # stage fingerprints + env for driver-divergence attribution
-    # (round-10 verdict item #1; see v4's docstring + diag module)
-    diag.record("s32_stream_ivm_rollup", {
-        "modes": modes,
-        "fp_lake_resolved": diag.frame_fingerprint(
-            read_table(session, lake),
-            ["user_id", "ts", "event_id", "event_type", "value_cents"],
-        ),
-        "fp_view_raw": diag.frame_fingerprint(read_table(session, view)),
-        "out_rows": sorted(map(list, got)),
-        "parity_ok": got == direct,
-        "env": diag.env_summary(session),
-    })
     shutil.rmtree(base, ignore_errors=True)
     assert got == direct, (
         "s32 IVM parity: maintained view != direct rollup of the "
@@ -2788,13 +2774,10 @@ def v4_ivm_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY over the resolved lake IN-QUERY with a loud message (a
     recurrence then attributes itself — assert fires → the IVM fold
     broke; hash mismatch with the assert green → the lake state itself
-    diverged from the oracle's model), and records stage fingerprints
-    + env knobs to diagnostics/ivm_runs.jsonl (async_pipes_spark.diag)
-    for cross-environment diffing."""
+    diverged from the oracle's model)."""
     import shutil
     import tempfile
 
-    from async_pipes_spark import diag
     from async_pipes_spark.functions.money import cents
     from async_pipes_spark.session import ensure_engine_confs
     from async_pipes_spark.sources.ivm import (
@@ -2880,7 +2863,7 @@ def v4_ivm_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert refresh_agg_view(spark, view)["mode"] == "noop"
     out = read_agg_view(spark, view).orderBy("seg")
     out_schema, out_rows = out.schema, out.collect()
-    # in-query parity + stage fingerprints (see docstring): the direct
+    # in-query parity (see docstring): the direct
     # rollup recomputes the view's definition from the resolved lake
     resolved_live = read_table(spark, path).where(
         ~F.coalesce(F.col("dead"), F.lit(False))
@@ -2895,16 +2878,6 @@ def v4_ivm_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     }
     got = {tuple(r) for r in out_rows}
-    diag.record("v4_ivm_agg_view", {
-        "refresh1": s1, "refresh2": s2,
-        "fp_source_live": diag.frame_fingerprint(
-            resolved_live, ["k", "ver", "bal_cents", "seg"]
-        ),
-        "fp_view_raw": diag.frame_fingerprint(read_table(spark, view)),
-        "out_rows": sorted(map(list, got)),
-        "parity_ok": got == direct,
-        "env": diag.env_summary(spark),
-    })
     shutil.rmtree(base, ignore_errors=True)
     assert got == direct, (
         "v4 IVM parity: maintained view != direct GROUP BY over the "
@@ -3033,18 +3006,6 @@ def v5_ivm_filtered_avg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
     got = {tuple(r) for r in out_rows}
-    from async_pipes_spark import diag
-
-    diag.record("v5_ivm_filtered_avg_view", {
-        "refresh1": s1, "refresh2": s2,
-        "fp_source_live": diag.frame_fingerprint(
-            resolved_live, ["k", "ver", "bal_cents", "seg"]
-        ),
-        "fp_view_raw": diag.frame_fingerprint(read_table(spark, view)),
-        "out_rows": sorted(map(list, got)),
-        "parity_ok": got == direct,
-        "env": diag.env_summary(spark),
-    })
     shutil.rmtree(base, ignore_errors=True)
     assert got == direct, (
         "v5 IVM parity: maintained filtered view != direct filtered "
@@ -3198,21 +3159,6 @@ def v6_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     }
     got = {tuple(r) for r in out_rows}
-    from async_pipes_spark import diag
-
-    diag.record("v6_ivm_join_view", {
-        "refresh1": s1, "refresh2": s2, "refresh3": s3,
-        "fp_left_live": diag.frame_fingerprint(
-            o_live, ["ok", "over", "price_cents", "custkey"]
-        ),
-        "fp_right_live": diag.frame_fingerprint(
-            c_live, ["custkey", "cver", "seg"]
-        ),
-        "fp_view_raw": diag.frame_fingerprint(read_table(spark, view)),
-        "out_rows": sorted(map(list, got)),
-        "parity_ok": got == direct,
-        "env": diag.env_summary(spark),
-    })
     shutil.rmtree(base, ignore_errors=True)
     assert got == direct, (
         "v6 join-view parity: maintained view != direct join GROUP BY; "
@@ -3236,12 +3182,11 @@ def v8_ivm_count_distinct_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     change invisible to every plain counter), a constant-valued new
     group ('NEW', nation 7 → distinct 1 at any size), deletes removing
     both last-holders and one-of-many holders, and insert-then-delete
-    keys netting to nothing. In-query parity assert + diag
-    fingerprints + materialized return, same contract as v4-v7."""
+    keys netting to nothing. In-query parity assert + materialized
+    return, same contract as v4-v7."""
     import shutil
     import tempfile
 
-    from async_pipes_spark import diag
     from async_pipes_spark.session import ensure_engine_confs
     from async_pipes_spark.sources.ivm import (
         create_agg_view,
@@ -3337,16 +3282,6 @@ def v8_ivm_count_distinct_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     }
     got = {tuple(r) for r in out_rows}
-    diag.record("v8_ivm_count_distinct_view", {
-        "refresh1": s1, "refresh2": s2,
-        "fp_source_live": diag.frame_fingerprint(
-            resolved_live, ["k", "ver", "nat", "seg"]
-        ),
-        "fp_view_raw": diag.frame_fingerprint(read_table(spark, view)),
-        "out_rows": sorted(map(list, got)),
-        "parity_ok": got == direct,
-        "env": diag.env_summary(spark),
-    })
     shutil.rmtree(base, ignore_errors=True)
     assert got == direct, (
         "v8 count-distinct parity: maintained view != direct "
@@ -3385,8 +3320,8 @@ def v7_ivm_join_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays the identical program declaratively. The
     reference's stateful-fold pattern (async-pipes src/lib.rs:140-187)
     imposes no aggregate restriction — neither does the engine now.
-    In-query parity assert + diag fingerprints + materialized return,
-    same contract as v4/v5/v6."""
+    In-query parity assert + materialized return, same contract as
+    v4/v5/v6."""
     import shutil
     import tempfile
 
@@ -3501,21 +3436,6 @@ def v7_ivm_join_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     }
     got = {tuple(r) for r in out_rows}
-    from async_pipes_spark import diag
-
-    diag.record("v7_ivm_join_minmax_view", {
-        "refresh1": s1, "refresh2": s2,
-        "fp_left_live": diag.frame_fingerprint(
-            o_live, ["ok", "over", "price_cents", "custkey"]
-        ),
-        "fp_right_live": diag.frame_fingerprint(
-            c_live, ["custkey", "cver", "seg"]
-        ),
-        "fp_view_raw": diag.frame_fingerprint(read_table(spark, view)),
-        "out_rows": sorted(map(list, got)),
-        "parity_ok": got == direct,
-        "env": diag.env_summary(spark),
-    })
     shutil.rmtree(base, ignore_errors=True)
     assert got == direct, (
         "v7 join-view min/max parity: maintained view != direct join "

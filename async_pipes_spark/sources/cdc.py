@@ -17,7 +17,13 @@ into the standard CDC row shape — one row per changed LIVE row with a
   uses, `sources/stats.py::_mor_contested_plan`);
 - post-images come from the shared last-writer-wins resolver
   (`sinks.py::_mor_resolve`) run with an EMPTY untouched branch — the
-  battle-tested merge semantics, none of the untouched base.
+  battle-tested merge semantics, none of the untouched base;
+- one keyed window pass over the pre ∪ post rows classifies every
+  changed key: per key it counts and collects both sides' rows, and
+  each row takes its ``_change_type`` in place (a key whose two row
+  multisets are equal emits nothing). NULL-key rows are never
+  contested, so each gets a window partition of its own and comes out
+  an ``insert``.
 
 At 100 TB this is the difference between "diff two snapshots" (two
 full scans + a key-partitioned shuffle of everything) and "read the
@@ -42,7 +48,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from async_pipes_spark.sources.sinks import (
     _mor_backlog_bytes,
@@ -268,71 +274,54 @@ def mor_changes(
         contested_base=contested_base,
     )
     resolved = align(resolved)
-    post_null = live(resolved.where(has_null_key))
-    post = live(resolved.where(~has_null_key))
 
-    # classify each contested key: the per-key aggregates are
-    # O(changed keys) and broadcast back onto the (equally small)
-    # pre/post row sets — nothing here touches untouched data
+    # classify in ONE keyed window pass over pre ∪ post: per key, each
+    # side's row count and sorted row multiset; every row then takes
+    # its label in place, with no join back. Suppression is exact
+    # MULTISET equality of the key's live rows — a backlog that
+    # rewrites a key to byte-identical contents, duplicates included,
+    # is a no-op — matching the snapshot-diff definition of the feed
+    # (the sorted lists are compared only when the counts agree).
+    # collect_list skips the other side's NULL entries, so each list
+    # holds only its own side's rows. A NULL-key row is never contested
+    # (the PRE semi-join matches non-null keys only): each gets its own
+    # window partition, so it comes out an insert and a large NULL-key
+    # group never collects into one frame.
     cmp_cols = [c for c in out_cols if c != tomb]
     can_compare = not any(
         "map<" in t for c, t in resolved.dtypes if c in cmp_cols
     )
-
-    # one tagged union + ONE aggregation classifies every contested
-    # key (a pre-agg/post-agg full-outer join can't broadcast, so it
-    # would sort-merge — pointless for two O(changed keys) sides).
-    # Suppression is exact MULTISET equality of the key's live rows —
-    # a backlog that rewrites a key to byte-identical contents,
-    # duplicates included, is a no-op — matching the snapshot-diff
-    # definition of the feed. collect_list drops the other side's
-    # NULL-valued entries, so each side aggregates only its own rows.
-    def side_set(side: int) -> Column:
-        return F.sort_array(
-            F.collect_list(
-                F.when(F.col("_side") == side, F.struct(*cmp_cols))
-            )
+    u = (
+        pre.withColumn("_side", F.lit(0))
+        .unionByName(live(resolved).withColumn("_side", F.lit(1)))
+        .withColumn(
+            "_null_key_row",
+            F.when(has_null_key, F.monotonically_increasing_id()),
         )
+    )
+    w = Window.partitionBy(*keys, "_null_key_row")
 
-    u = pre.withColumn("_side", F.lit(0)).unionByName(
-        post.withColumn("_side", F.lit(1))
+    def per_key(side: int, name: str) -> list[Column]:
+        mine = F.col("_side") == side
+        out = [F.count(F.when(mine, F.lit(1))).over(w).alias(f"_n_{name}")]
+        if can_compare:
+            rows = F.collect_list(F.when(mine, F.struct(*cmp_cols)))
+            out.append(F.sort_array(rows.over(w)).alias(f"_set_{name}"))
+        return out
+
+    counted = u.select(
+        *out_cols, "_side", *per_key(0, "pre"), *per_key(1, "post")
     )
-    g = u.groupBy(*keys).agg(
-        F.count(F.when(F.col("_side") == 0, F.lit(1))).alias("_n_pre"),
-        F.count(F.when(F.col("_side") == 1, F.lit(1))).alias("_n_post"),
-        *([side_set(0).alias("_set_pre"), side_set(1).alias("_set_post")]
-          if can_compare else []),
-    )
+    n_pre, n_post = F.col("_n_pre"), F.col("_n_post")
     noop = (
-        F.col("_set_pre").eqNullSafe(F.col("_set_post"))
+        (n_pre == n_post) & F.col("_set_pre").eqNullSafe(F.col("_set_post"))
         if can_compare
         else F.lit(False)
     )
-    cls = (
-        g.withColumn(
-            "_kind",
-            F.when(F.col("_n_pre") == 0, F.lit("insert"))
-            .when(F.col("_n_post") == 0, F.lit("delete"))
-            .when(noop, F.lit(None).cast("string"))
-            .otherwise(F.lit("update")),
-        )
-        .where(F.col("_kind").isNotNull())
-        .select(*keys, "_kind")
+    kind = (
+        F.when(n_pre == 0, F.lit("insert"))
+        .when(n_post == 0, F.lit("delete"))
+        .when(F.col("_side") == 0, F.lit("update_preimage"))
+        .otherwise(F.lit("update_postimage"))
     )
-    cls = F.broadcast(cls)
-
-    def tag(df: DataFrame, kind: str, label: str) -> DataFrame:
-        return (
-            df.join(cls.where(F.col("_kind") == kind), list(keys))
-            .drop("_kind")
-            .withColumn(_CHANGE_COL, F.lit(label))
-        )
-
-    feed = (
-        tag(post, "insert", "insert")
-        .unionByName(tag(pre, "update", "update_preimage"))
-        .unionByName(tag(post, "update", "update_postimage"))
-        .unionByName(tag(pre, "delete", "delete"))
-        .unionByName(post_null.withColumn(_CHANGE_COL, F.lit("insert")))
-    )
-    return feed.select(*out_cols, _CHANGE_COL)
+    return counted.where(~noop).select(*out_cols, kind.alias(_CHANGE_COL))

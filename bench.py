@@ -82,14 +82,14 @@ def _mor_depth_series(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def _ab_vs_prev_round(
+def _ab_vs_parent(
     sf_dir: str, cpus: int, head_timings: dict[str, float] | None = None
 ) -> dict | None:
-    """Interleaved A/B against the previous round's commit — the ONE
-    way to make round-over-round perf a signal instead of host weather
+    """Interleaved A/B against the parent commit (``HEAD~1``) — the ONE
+    way to make commit-over-commit perf a signal instead of host weather
     (r7's headline read 1.4x slower than r6 on untouched code; an
     idle-machine re-run proved the host was simply slower that
-    session). Method: check out the last ``round N:`` commit in a git
+    session). Method: check out ``HEAD~1`` in a git
     worktree, then alternate full-suite passes HEAD↔prev, each in its
     own subprocess/JVM (tools/ab_pass.py), so whatever the machine is
     doing lands on BOTH sides of every ratio.
@@ -110,7 +110,7 @@ def _ab_vs_prev_round(
     be noise presented as signal).
 
     Returns None (and the record omits the section) when there is no
-    previous round commit or the worktree can't be created — never
+    parent commit or the worktree can't be created — never
     fails the bench. Knobs: SPARK_GRAFT_AB=0 disables;
     SPARK_GRAFT_AB_PASSES (default 3) pass pairs."""
     if os.environ.get("SPARK_GRAFT_AB", "1") == "0":
@@ -123,11 +123,9 @@ def _ab_vs_prev_round(
         ).stdout.strip()
 
     try:
-        prev = git("log", "--grep=^round [0-9]*:", "-n1", "--format=%H")
+        prev = git("rev-parse", "--verify", "--quiet", "HEAD~1")
     except (subprocess.CalledProcessError, FileNotFoundError):
-        return None
-    if not prev:
-        return None  # round 1: nothing to compare against
+        return None  # root commit: nothing to compare against
     wt = REPO / ".ab_prev"
     try:
         if wt.exists():
@@ -364,12 +362,12 @@ def main() -> None:
     queries.update(EXTENSION_QUERIES)
     queries.update(JOIN_QUERIES)
 
-    # interleaved A/B vs the previous round's commit runs FIRST, on the
+    # interleaved A/B vs the parent commit runs FIRST, on the
     # quiet start of the bench window (r11 verdict item 7: the serial
     # suite pass heats the host and contaminated the per-query movers
     # it was supposed to adjudicate — mm4/a1/g2 read 2-3x in r11's
     # serial numbers while their PAIRED ratios sat at 0.95-1.28). The
-    # hot set comes from the PREVIOUS round's committed BENCH_FULL.json
+    # hot set comes from the last committed BENCH_FULL.json
     # instead of this run's timings; a missing/unreadable record falls
     # back to the full shared list (identical workload either way).
     # Never fails the bench.
@@ -382,7 +380,7 @@ def main() -> None:
     except Exception:  # noqa: BLE001
         prev_timings = None
     try:
-        ab = _ab_vs_prev_round(sf_dir, cpus, head_timings=prev_timings)
+        ab = _ab_vs_parent(sf_dir, cpus, head_timings=prev_timings)
     except Exception as e:  # noqa: BLE001
         ab = {"error": f"{type(e).__name__}: {e}"[:300]}
 

@@ -226,6 +226,94 @@ def test_mor_changes_null_keys(spark, tmp_path):
     # (versioned spec): one winner → one insert
     assert feed == Counter({(None, 9, "d_null_hi", False, "insert"): 1})
 
+    # one backlog on a composite key: several NULL-key survivors (any
+    # NULL component, across batches), NULL-component base rows, and
+    # contested non-null keys classified beside them
+    schema2 = "k bigint, g string, ver bigint, s string, dead boolean"
+    cols2 = ("k", "g", "ver", "s", "dead")
+    path2 = str(tmp_path / "t2")
+    base2 = [
+        (1, "a", 0, "a1", False), (2, "b", 0, "b1", False),
+        (3, "c", 0, "c1", False), (None, "x", 0, "base_nk", False),
+        (4, None, 0, "base_ng", False),
+    ]
+    write_manifest_table(spark, spark.createDataFrame(base2, schema2), path2)
+    for batch in (
+        [
+            (None, "x", 5, "nk_x_lo", False),   # loses within its batch
+            (None, "x", 7, "nk_x_hi", False),
+            (None, "y", 1, "nk_y", False),
+            (5, None, 1, "ng_5", False),
+            (None, None, 1, "nn", False),
+            (1, "a", 3, "a2", False),           # update
+            (2, "b", 0, "b1", False),           # identical rewrite: no-op
+            (3, "c", 4, "c_dead", True),        # delete
+            (6, "f", 1, "f1", False),           # insert
+        ],
+        [
+            (5, None, 2, "ng_5_again", False),  # a NULL key never matches
+            (None, "y", 9, "nk_y_dead", True),  # a dead NULL-key winner
+            (1, "a", 2, "a_stale", False),      # loses to a2
+        ],
+    ):
+        mor_upsert(
+            spark, path2, spark.createDataFrame(batch, schema2),
+            key_cols=["k", "g"], version_cols=["ver"], tombstone_col="dead",
+        )
+    feed2 = _feed_counter(mor_changes(spark, path2), cols2)
+    survivors = [
+        (None, "x", 7, "nk_x_hi", False), (None, "y", 1, "nk_y", False),
+        (5, None, 1, "ng_5", False), (None, None, 1, "nn", False),
+        (5, None, 2, "ng_5_again", False),
+    ]
+    assert feed2 == Counter({
+        **{row + ("insert",): 1 for row in survivors},
+        (6, "f", 1, "f1", False, "insert"): 1,
+        (1, "a", 0, "a1", False, "update_preimage"): 1,
+        (1, "a", 3, "a2", False, "update_postimage"): 1,
+        (3, "c", 0, "c1", False, "delete"): 1,
+    })
+    base2_live = _live_rows(spark.createDataFrame(base2, schema2), cols2)
+    assert _apply_feed(base2_live, feed2) == Counter(
+        _live_rows(read_table(spark, path2), cols2)
+    )
+
+
+def test_mor_changes_pin_job_count(spark, tmp_path):
+    """Pinning one feed of a versioned delta over a flat manifest table
+    costs 6 Spark jobs: one keyed window pass classifies every changed
+    key, with no per-change-type joins against a broadcast key table."""
+    from async_pipes_spark.session import pin
+
+    path = str(tmp_path / "t")
+    base = [(k, 0, f"i{k}", False) for k in range(20)]
+    write_manifest_table(spark, spark.createDataFrame(base, SCHEMA), path)
+    mor_upsert(
+        spark, path,
+        spark.createDataFrame(
+            [(3, 1, "u3", False), (4, 1, None, True), (25, 1, "n25", False),
+             (None, 1, "nk", False)],
+            SCHEMA,
+        ),
+        key_cols=["k"], version_cols=["ver"], tombstone_col="dead",
+    )
+    feed = mor_changes(spark, path)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_cdc.pin_job_count", "pin one CDC feed")
+    try:
+        pinned = pin(feed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_cdc.pin_job_count")
+    assert _feed_counter(pinned) == Counter({
+        (3, 0, "i3", False, "update_preimage"): 1,
+        (3, 1, "u3", False, "update_postimage"): 1,
+        (4, 0, "i4", False, "delete"): 1,
+        (25, 1, "n25", False, "insert"): 1,
+        (None, 1, "nk", False, "insert"): 1,
+    })
+    assert len(jobs) == 6, sorted(jobs)
+
 
 def test_mor_changes_empty_backlog_schema(spark, tmp_path):
     path = str(tmp_path / "t")
