@@ -124,14 +124,14 @@ def _in_expr(col_name: str, values: list) -> Column:
     ``In(attr, [literals])`` predicate, folded and pushed to the
     parquet scan identically (pinned by test_plans). Only int and str
     keys take the fast path — every surrogate/string join key in the
-    engine — anything else falls back to ``isin`` unchanged, as does
-    an identifier that needs quoting."""
+    engine — anything else falls back to ``isin`` unchanged. The column
+    is always backtick-quoted: a bare SQL keyword (``null``, ``not``,
+    ``true``) would otherwise parse as a literal or an operator."""
     if not values:
         return F.lit(False)  # isin([]): false for every non-null row
-    ok_ident = col_name.isidentifier()
     rendered = []
     for v in values:
-        if isinstance(v, bool) or not ok_ident:
+        if isinstance(v, bool):
             rendered = None
             break
         if isinstance(v, int):
@@ -145,7 +145,8 @@ def _in_expr(col_name: str, values: list) -> Column:
             break
     if rendered is None:
         return F.col(col_name).isin(values)
-    return F.expr(f"{col_name} IN ({', '.join(rendered)})")
+    quoted = "`" + col_name.replace("`", "``") + "`"
+    return F.expr(f"{quoted} IN ({', '.join(rendered)})")
 
 def _side_state(spark, path: str) -> tuple[str, str, list[str], str]:
     """(flavor, base_name, deltas, token) of a source's pinned state."""

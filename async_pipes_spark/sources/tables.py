@@ -4,15 +4,19 @@ Plays the role of the reference's producers (``with_inputs`` /
 ``with_producer``, reference src/pipeline/builder.rs:41-119) for
 file-backed data: a declarative ``spark.read`` whose scan Catalyst can
 push filters/projection into. At 100 TB these would be partitioned
-directories; the reader code is identical.
+directories; the reader code is identical. Each file's schema is
+inferred once per file version and memoized, so only the first load of
+a file version launches a Spark job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from async_pipes_spark.session import ensure_engine_confs
+from async_pipes_spark.sources.sinks import _hadoop_fs
 
 TABLES = (
     "region",
@@ -28,14 +32,13 @@ TABLES = (
 )
 
 
-#: (applicationId, sf_dir, name) → DataFrame plan. A DataFrame is an
-#: immutable lazy plan; caching it reuses the resolved file index and
-#: schema across queries — the analogue of the oracle's pre-registered
-#: DuckDB views (per-query relisting would bill fixed setup cost to
-#: every query at any scale). OPT-IN (``SPARK_GRAFT_BLOCK_CACHE=1``,
-#: set by bench.py over the immutable testdata): the pinned file
-#: listing goes stale if the directory is rewritten mid-application.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: path → (file identity, schema inferred under the engine's confs).
+#: Parquet schema inference launches a one-task footer job on every
+#: ``spark.read.parquet``, even for a single file; a read with the
+#: schema given launches none. The identity is each leaf file's (path,
+#: length, modification time), so a rewrite at the same path infers
+#: again and the memo holds one entry per path.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
 
 
 #: the ONE events ns→µs conversion, shared by the batch reader and the
@@ -47,8 +50,41 @@ _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 EVENTS_NS_TO_TS = "timestamp_micros((ts - pmod(ts, 1000)) div 1000)"
 
 
+def _file_identity(spark: SparkSession, path: str) -> tuple:
+    """(path, length, mtime) of every leaf file ``path`` names: one
+    file, the files under a directory (whose own mtime misses rewrites
+    of nested files), or a glob's matches. Empty if nothing matches, so
+    the inferred read raises its usual error."""
+    fs, p, _ = _hadoop_fs(spark, path)
+    leaves = []
+    for st in fs.globStatus(p) or ():
+        if not st.isDirectory():
+            leaves.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+            continue
+        files = fs.listFiles(st.getPath(), True)
+        while files.hasNext():
+            f = files.next()
+            leaves.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return tuple(sorted(leaves))
+
+
+def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from
+    :data:`_SCHEMA_MEMO` while the file is unchanged, so only the first
+    read of each file version pays the inference job."""
+    ensure_engine_confs(spark)
+    ident = _file_identity(spark, path)
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[path] = (ident, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table (cached plan per session).
+    """Load one synthetic table (schema memoized per file version, see
+    :func:`read_parquet_table`).
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS) which Spark
     cannot represent; we read it as a nanosecond Long (legacy conf) and
@@ -56,22 +92,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB's ``CAST(ts AS TIMESTAMP)`` performs, so oracle comparisons
     line up.
     """
-    import os
-
-    use_cache = os.environ.get("SPARK_GRAFT_BLOCK_CACHE") == "1"
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if use_cache:
-        cached = _TABLE_CACHE.get(key)
-        if cached is not None:
-            return cached
-    ensure_engine_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr(EVENTS_NS_TO_TS))
-    df = normalize_ntz(df)
-    if use_cache:
-        _TABLE_CACHE[key] = df
-    return df
+    return normalize_ntz(df)
 
 
 def normalize_ntz(df: DataFrame) -> DataFrame:

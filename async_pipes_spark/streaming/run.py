@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 from async_pipes_spark.pipeline.options import WorkerOptions
 from async_pipes_spark.session import ensure_engine_confs
 from async_pipes_spark.session import pin as _pin
-from async_pipes_spark.sources.tables import EVENTS_NS_TO_TS, normalize_ntz
+from async_pipes_spark.sources.tables import (
+    EVENTS_NS_TO_TS,
+    normalize_ntz,
+    read_parquet_table,
+)
 
 def stream_table(
     spark: SparkSession,
@@ -38,8 +42,9 @@ def stream_table(
 
     Schema-driven, like the reference's table-agnostic unbounded
     producers (src/pipeline/builder.rs:96-119): the file stream source
-    requires an explicit schema, which we take from a one-footer batch
-    read of the same file — no hand-maintained per-table schemas.
+    requires an explicit schema, which we take from the batch reader's
+    per-file schema memo (``read_parquet_table``) — no hand-maintained
+    per-table schemas, and one inference path for both readers.
     ``events.ts`` gets the same ns→µs conversion as the batch reader
     so streaming twins agree with batch oracles byte-for-byte.
 
@@ -60,8 +65,7 @@ def stream_table(
     honored by availableNow drains too, which split into that many
     files per micro-batch). Kafka-style sources would map to
     ``maxOffsetsPerTrigger``; omit for unthrottled intake."""
-    ensure_engine_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    raw_schema = read_parquet_table(spark, f"{sf_dir}/{name}.parquet").schema
     if shuffle_partitions is not None:
         session = spark.newSession()
         ensure_engine_confs(session)

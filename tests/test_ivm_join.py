@@ -662,6 +662,13 @@ def test_in_expr_matches_isin(spark):
         got = sorted(map(tuple, df.where(_in_expr(col, vals)).collect()))
         want = sorted(map(tuple, df.where(F.col(col).isin(vals)).collect()))
         assert got == want and len(got) == n_want, (col, vals, got, want)
+    # SQL keywords as column names are quoted, never parsed as a
+    # literal (null, true) or an operator (not)
+    for kw in ("null", "not", "true"):
+        kdf = df.select(F.col("k").alias(kw)).where(F.col(kw).isin([1, 3]))
+        got = kdf.where(_in_expr(kw, [1])).collect()
+        want = kdf.where(F.col(kw).isin([1])).collect()
+        assert got == want and len(got) == 1, (kw, got, want)
     # empty key set: no row survives (isin([])'s filter semantics)
     assert df.where(_in_expr("k", [])).count() == 0
     # fallback lane (non-int/str values): same rows as isin

@@ -4,8 +4,11 @@ partitions option, SQL entry point."""
 
 import contextlib
 import io
+import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from async_pipes_spark.operators.skew import salted_aggregate
@@ -129,6 +132,85 @@ def test_sql_entry_point(spark):
         .collect()
     )
     assert got == direct
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group. A
+    sentinel job in a second group is awaited first: the status
+    listener sees events in order, so once the sentinel shows, every
+    job ``fn`` launched shows too."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    tracker = sc.statusTracker()
+    sc.setJobGroup(f"{tag}-fn", "fn")
+    try:
+        fn()
+        sc.setJobGroup(f"{tag}-sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never showed"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(f"{tag}-fn"))
+
+
+def test_load_table_schema_memo_skips_inference_job(spark, tmp_path):
+    """Only the first load of a file version infers its schema (one
+    footer job); a second load of the unchanged file launches none."""
+    pq.write_table(pa.table({"a": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    first = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    second = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert first >= 1 and second == 0, (first, second)
+    assert sorted(load_table(spark, str(tmp_path), "t").collect()) == [(1,), (2,), (3,)]
+
+
+def test_load_table_schema_memo_sees_rewrite(spark, tmp_path):
+    """A rewrite at the same path changes the file identity, so the
+    next load infers again: an added column and a changed column type
+    both show."""
+    path, d = str(tmp_path / "t.parquet"), str(tmp_path)
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert load_table(spark, d, "t").dtypes == [("a", "bigint")]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    assert load_table(spark, d, "t").dtypes == [("a", "bigint"), ("b", "string")]
+    pq.write_table(pa.table({"a": ["1", "2", "3"], "b": ["x", "y", "z"]}), path)
+    df = load_table(spark, d, "t")
+    assert df.dtypes == [("a", "string"), ("b", "string")]
+    assert sorted(df.collect()) == [("1", "x"), ("2", "y"), ("3", "z")]
+
+
+def test_load_table_schema_memo_hit_matches_inference(spark, tmp_path):
+    """On a memo hit the schema, nullability included, equals a fresh
+    inferred read, and a nanosecond ``events.ts`` still gets the
+    floor ns→µs conversion."""
+    from async_pipes_spark.sources.tables import _SCHEMA_MEMO, read_parquet_table
+
+    d = str(tmp_path)
+    schema = pa.schema(
+        [pa.field("k", pa.int64(), nullable=False), pa.field("v", pa.string())]
+    )
+    pq.write_table(
+        pa.table({"k": [1, 2], "v": ["a", None]}, schema=schema), f"{d}/t.parquet"
+    )
+    ns = [1_500, -1_500, 1_700_000_000_123_456_789]
+    pq.write_table(
+        pa.table({"event_id": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        f"{d}/events.parquet",
+    )
+    for name in ("t", "events"):
+        path = f"{d}/{name}.parquet"
+        read_parquet_table(spark, path)
+        assert path in _SCHEMA_MEMO
+        hit = _jobs_launched(spark, lambda: read_parquet_table(spark, path).schema)
+        assert hit == 0, (name, hit)
+        assert read_parquet_table(spark, path).schema == spark.read.parquet(path).schema
+
+    ev = load_table(spark, d, "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    got = ev.select("event_id", F.unix_micros("ts")).collect()
+    assert sorted(map(tuple, got)) == [(1, 1), (2, -2), (3, 1_700_000_000_123_456)]
 
 
 def test_iterate_inplace_converges_and_guards(spark):

@@ -4,9 +4,10 @@
 
 The local scheduling floor (~0.2-0.5 s/job on local[32]) makes driver
 job COUNT the load-immune proxy for lifecycle-query wall clock (r12
-verdict: the remaining IVM cost is job count, not data path). Reads
-the DAGScheduler's monotonically increasing nextJobId before and
-after the query body — exact, no sampling.
+verdict: the remaining IVM cost is job count, not data path). The
+query body runs under its own job group, and the jobs are read back
+through the public ``statusTracker().getJobIdsForGroup`` — exact, no
+sampling.
 """
 
 from __future__ import annotations
@@ -19,30 +20,44 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+USAGE = "usage: python tools/job_count.py <query> [sf_dir]"
+
 
 def main() -> int:
+    import __spark_entry__ as entry
+
+    queries = entry.queries()
+    if len(sys.argv) < 2 or sys.argv[1] not in queries:
+        print(USAGE, file=sys.stderr)
+        print("queries: " + " ".join(sorted(queries)), file=sys.stderr)
+        return 2
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 
-    import __spark_entry__ as entry
     from async_pipes_spark.session import get_spark
 
-    queries = entry.queries()
-    fn = queries[name]
     spark = get_spark("jobcount", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    queries["p6_map_reduce"](spark, sf_dir).collect()  # warm
-
-    def next_job_id() -> int:
-        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-
-    j0 = next_job_id()
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    rows = df.toPandas()
-    wall = time.perf_counter() - t0
-    j1 = next_job_id()
-    print(f"{name}: {wall:.2f}s wall, {j1 - j0} jobs, {len(rows)} rows", flush=True)
-    spark.stop()
+    try:
+        queries["p6_map_reduce"](spark, sf_dir).collect()  # warm
+        sc = spark.sparkContext
+        group = f"job_count-{name}"
+        sc.setJobGroup(group, name)
+        t0 = time.perf_counter()
+        rows = queries[name](spark, sf_dir).toPandas()
+        wall = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # a sentinel job in a second group: the status listener sees
+        # events in order, so once it shows, every query job shows too
+        sc.setJobGroup(f"{group}-sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        while not tracker.getJobIdsForGroup(f"{group}-sentinel"):
+            time.sleep(0.05)
+        jobs = len(tracker.getJobIdsForGroup(group))
+        print(f"{name}: {wall:.2f}s wall, {jobs} jobs, {len(rows)} rows", flush=True)
+    finally:
+        spark.stop()
     return 0
 
 
