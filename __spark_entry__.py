@@ -38,22 +38,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return DECLARED_QUERIES["p6_map_reduce"](spark, "/root/testdata/sf0.001")
 
 
-#: Driver-contract ordering. The verification driver records correctness
-#: rows for the FIRST 50 ``queries()`` entries per round (r02-r11 all
-#: cut at entry #50), so dict order IS driver coverage. Policy: queries
-#: new this round and queries without a fresh driver row come FIRST;
-#: the freshest greens rotate to the tail. Round-12 window (the r11
-#: verdict's items 1 and 3, executed): the six IVM-family rows lead —
-#: v4/v5/v6/v7/s32 were the r11 driver-reds whose oracles alone
-#: emitted HUGEINT (now CAST ... AS BIGINT; this window is the
-#: falsification run), v8 rides along as the same-family green
-#: control; then ALL 44 queries whose freshest green driver row dates
-#: to r09, j1/j4/j5 among them (they verify the same HUGEINT fix on
-#: the green side). 6 + 44 = 50 exactly. The three r09 rows that
-#: don't fit (z1/z4/z5) sit first past the cut, ahead of the
-#: r10/r11-refreshed tail; SWEEP_r12 carries same-round evidence for
-#: everything past the cut. Every query keeps its oracle regardless
-#: of position.
+#: Driver-contract ordering: a verification driver may record rows for
+#: only the first 50 ``queries()`` entries, so dict order is driver
+#: coverage. Queries without a fresh driver row come first; the
+#: freshest greens sit at the tail. Every query keeps its oracle
+#: regardless of position.
 _PRIORITY = [
     # the r11 driver-red IVM family (HUGEINT falsification) + its
     # same-family green control v8

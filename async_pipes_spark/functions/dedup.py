@@ -24,7 +24,7 @@ divergence. Ratios are canonicalized to integer micro-units.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from async_pipes_spark.session import pin as _pin
@@ -480,55 +480,64 @@ def dedup_group_labels(
     max_iterations: int = 64,
 ) -> DataFrame:
     """Resolve candidate near-dup PAIRS into dedup GROUPS: connected
-    components of the pair graph by iterative min-label propagation —
-    the step that turns LSH output into an actionable keep/drop list
-    (keep_id = the smallest doc id in each component). Returns
-    (doc_id, keep_id) for every doc that appears in a pair.
+    components of the pair graph by min-label propagation with pointer
+    jumping — the step that turns LSH output into an actionable
+    keep/drop list (keep_id = the smallest doc id in each component).
+    Returns (doc_id, keep_id) for every doc that appears in a pair.
 
     The loop is the engine's cycle primitive (reference cyclic pipes,
-    README.md:12-13) applied to data: each round every vertex adopts
-    the minimum label among itself and its neighbors; quiescence =
-    no label changed (the empty-frontier termination of
-    pipeline._run_cycle). Rounds needed = component diameter — dup
-    clusters are shallow (typically 2-5 docs), so this converges in
-    2-3 rounds; corpora with pathological chain-shaped components
-    would want the O(log n) large-star/small-star variant instead.
-    Per-round cost: one shuffle join on vertex id + one aggregation;
-    lineage is cut each round (localCheckpoint) so plans stay flat.
+    README.md:12-13) applied to data, with quiescence = no label fell
+    (the empty-frontier termination of pipeline._run_cycle). The
+    symmetric edge set is pinned once; the first labels come from the
+    edges alone (``least(min(dst), src)`` per vertex). Each later round
+    is ONE aggregate over two candidate sets per vertex v: its
+    neighbours' labels (edges ⋈ labels on dst) and the label of its own
+    label (labels ⋈ labels on lbl = v — pointer jumping, which also
+    carries the old label). Jumping halves the remaining distance to
+    the root, so chains converge in O(log diameter) rounds, not
+    diameter rounds. The number of vertices whose label fell is
+    observed (``DataFrame.observe``) on the frame the round pins, so
+    the convergence test costs no Spark job of its own.
+
+    Exact: every label is a vertex id of the same component and labels
+    never rise, so at the fixpoint lbl(v) ≤ lbl(u) for every neighbour
+    u — the label is constant on each component and equals its minimum.
     """
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).transform(_pin)
-    labels = edges.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("lbl")
-    ).transform(_pin)
+    labels = (
+        edges.groupBy("src")
+        .agg(F.least(F.min("dst"), F.col("src")).alias("lbl"))
+        .withColumnRenamed("src", "v")
+        .transform(_pin)
+    )
 
+    no_old = F.lit(None).cast(labels.schema["lbl"].dataType).alias("old")
     for _ in range(max_iterations):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.v)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nlbl"))
+        nbr = edges.join(labels, edges.dst == labels.v).select(
+            F.col("src").alias("v"), "lbl", no_old
         )
-        proposed = (
-            labels.join(nbr_min, labels.v == nbr_min.src, "left")
-            .select(
-                "v",
-                F.col("lbl").alias("old"),
-                F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl"),
-            )
+        a, b = labels.alias("a"), labels.alias("b")
+        jump = a.join(b, F.col("a.lbl") == F.col("b.v")).select(
+            F.col("a.v").alias("v"), F.col("b.lbl"), F.col("a.lbl").alias("old")
+        )
+        fell = Observation()
+        labels = (
+            nbr.unionByName(jump)
+            .groupBy("v")
+            .agg(F.min("lbl").alias("lbl"), F.max("old").alias("old"))
+            .observe(fell, F.count_if(F.col("lbl") < F.col("old")).alias("n"))
             .transform(_pin)
         )
-        if proposed.filter(F.col("lbl") < F.col("old")).isEmpty():
+        if fell.get["n"] == 0:
             break
-        labels = proposed.select("v", "lbl")
     else:
         raise RuntimeError(
             f"label propagation did not converge in {max_iterations} rounds"
         )
-    return proposed.select(
-        F.col("v").alias("doc_id"), F.col("lbl").alias("keep_id")
-    )
+    return labels.select(F.col("v").alias("doc_id"), F.col("lbl").alias("keep_id"))
 
 
 def simhash_pairs(
@@ -647,85 +656,6 @@ def simhash_pairs(
         .distinct()
     )
     return pairs
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_rounds: int = 40,
-) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — converges in O(log n) rounds regardless of
-    component DIAMETER, where :func:`dedup_group_labels`'s min-label
-    propagation needs diameter rounds (fine for shallow dup clusters,
-    hopeless for chain-shaped components). Same output contract:
-    (doc_id, keep_id = component minimum) for every vertex in a pair.
-
-    Each round is two aggregations + two joins on vertex ids, no
-    collect_list (the per-node neighborhood minimum comes from
-    ``min()`` partial aggregation, so a celebrity node costs a counter,
-    not a buffered list). Lineage is cut per round.
-
-    large-star: every node's LARGER neighbors re-link to its
-    neighborhood minimum (including itself); small-star: the not-larger
-    neighbors and the node re-link likewise. At the fixpoint every edge
-    is (v, component_min).
-    """
-    e = pairs.select(
-        F.greatest(F.col(a_col), F.col(b_col)).alias("u"),
-        F.least(F.col(a_col), F.col(b_col)).alias("v"),
-    ).filter(F.col("u") != F.col("v")).distinct().transform(_pin)
-
-    def large_star(edges: DataFrame) -> DataFrame:
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(edges: DataFrame) -> DataFrame:
-        # edges already oriented u > v
-        mins = edges.groupBy("u").agg(F.min("v").alias("m"))
-        relink = (
-            edges.join(mins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        self_link = mins.select(F.col("u"), F.col("m").alias("v"))
-        return (
-            relink.unionByName(self_link)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    for _ in range(max_rounds):
-        after = small_star(
-            large_star(e).select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-        ).transform(_pin)
-        stable = (
-            after.exceptAll(e).isEmpty() and e.exceptAll(after).isEmpty()
-        )
-        e = after
-        if stable:
-            break
-    else:
-        raise RuntimeError(f"star contraction did not converge in {max_rounds} rounds")
-
-    # fixpoint: every edge is (vertex, component_min); the minima
-    # themselves are their own keep ids
-    verts = e.select(F.col("u").alias("doc_id"), F.col("v").alias("keep_id"))
-    roots = e.select(F.col("v").alias("doc_id"), F.col("v").alias("keep_id")).distinct()
-    return verts.unionByName(roots).distinct()
 
 
 def decontaminate_corpus(

@@ -69,32 +69,7 @@ def _row_chunks(pdf, other_axis: int, cap: int):
         yield pdf.iloc[s : s + step]
 
 
-#: (applicationId, plan semantic hash) → collected block. Query/centroid
-#: blocks are bounded (≤ MAX_QUERY_BLOCK) and the benchmark/driver call
-#: the same query repeatedly; re-collecting an identical plan would bill
-#: a full Spark job (~100 ms at any scale) to every call.
-#:
-#: OPT-IN ONLY (``SPARK_GRAFT_BLOCK_CACHE=1`` — bench.py sets it): the
-#: key cannot see DATA changes behind the same plan, so overwriting a
-#: source path between calls in one application would silently serve
-#: pre-overwrite rows, and the 32-bit semanticHash can in principle
-#: collide. Enable it only over immutable sources (the benchmark's
-#: read-only testdata). Eviction is FIFO-bounded, not LRU.
-_BLOCK_CACHE: dict[tuple[str, int], list] = {}
-_BLOCK_CACHE_MAX = 8
-
-
 def _collect_block(df: DataFrame, what: str) -> list:
-    import os
-
-    key = None
-    if os.environ.get("SPARK_GRAFT_BLOCK_CACHE") == "1":
-        try:
-            key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-        except Exception:  # pragma: no cover - semanticHash unavailable
-            key = None
-    if key is not None and key in _BLOCK_CACHE:
-        return _BLOCK_CACHE[key]
     rows = df.limit(MAX_QUERY_BLOCK + 1).collect()
     if len(rows) > MAX_QUERY_BLOCK:
         raise ValueError(
@@ -103,10 +78,6 @@ def _collect_block(df: DataFrame, what: str) -> list:
             "the LSH/IVF operators (minhash_lsh_pairs / ivf_topk with "
             "kmeans_centroids) instead"
         )
-    if key is not None:
-        while len(_BLOCK_CACHE) >= _BLOCK_CACHE_MAX:
-            _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))
-        _BLOCK_CACHE[key] = rows
     return rows
 
 

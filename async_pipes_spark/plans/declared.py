@@ -42,12 +42,11 @@ from async_pipes_spark.sources.tables import load_table
 #: equivalent). Queries whose construction RUNS jobs (p8's fixpoint
 #: materializes its converged frame) must NOT use this — caching them
 #: would reuse results, not plans.
-#: OPT-IN ONLY (``SPARK_GRAFT_BLOCK_CACHE=1``, the same gate as the
-#: similarity block cache — bench.py sets it over the immutable
-#: testdata): a cached DataFrame pins the parquet FILE LISTING from
-#: first build, so overwriting a source directory in the same
-#: application would fail on deleted part files or silently miss new
-#: ones. Re-execution of file CONTENTS per action is safe; directory
+#: OPT-IN ONLY (``SPARK_GRAFT_BLOCK_CACHE=1`` — bench.py sets it over
+#: the immutable testdata): a cached DataFrame pins the parquet FILE
+#: LISTING from first build, so overwriting a source directory in the
+#: same application would fail on deleted part files or silently miss
+#: new ones. Re-execution of file CONTENTS per action is safe; directory
 #: re-listing is what the cache skips.
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 

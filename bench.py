@@ -343,11 +343,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # the benchmark reads only the immutable testdata, so the opt-in
-    # caches are safe here: declared._PLAN_CACHE (prepared plans) and
-    # functions.similarity._BLOCK_CACHE (query/centroid blocks). Both
-    # are opt-in because they cannot see data changes behind an
-    # unchanged plan. Table loads need no gate: sources.tables memoizes
-    # schemas by file identity, so a rewrite is always seen.
+    # declared._PLAN_CACHE (prepared plans) is safe here; it is opt-in
+    # because it cannot see data changes behind an unchanged plan.
+    # Query/centroid blocks are collected on every call, and table
+    # loads need no gate: sources.tables memoizes schemas by file
+    # identity, so a rewrite is always seen.
     os.environ.setdefault("SPARK_GRAFT_BLOCK_CACHE", "1")
 
     from async_pipes_spark.session import get_spark

@@ -326,22 +326,77 @@ def test_kmeans_centroids_deterministic_and_usable(spark):
     assert assigned.filter(assigned.cell.isNull()).count() == 0
 
 
+#: chain 1-2-3-4-5, triangle 10-11-12, pair 20-21
+_LABEL_PAIRS = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)]
+_LABEL_WANT = {(v, 1) for v in (1, 2, 3, 4, 5)} | {(v, 10) for v in (10, 11, 12)} | {
+    (20, 20),
+    (21, 20),
+}
+
+
+def _union_find_labels(edges) -> set:
+    """(vertex, component minimum) for every vertex of ``edges``."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in parent}
+
+
 def test_dedup_group_labels_chain_and_clusters(spark):
     """Min-label propagation resolves a 5-vertex chain (needs multiple
     rounds), a triangle, and an isolated pair into min-id components."""
     from async_pipes_spark.functions.dedup import dedup_group_labels
 
-    pairs = spark.createDataFrame(
-        # chain 1-2-3-4-5, triangle 10-11-12, pair 20-21
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "doc_a bigint, doc_b bigint",
-    )
+    pairs = spark.createDataFrame(_LABEL_PAIRS, "doc_a bigint, doc_b bigint")
     got = {(r.doc_id, r.keep_id) for r in dedup_group_labels(pairs).collect()}
-    want = {(v, 1) for v in (1, 2, 3, 4, 5)} | {(v, 10) for v in (10, 11, 12)} | {
-        (20, 20),
-        (21, 20),
-    }
-    assert got == want
+    assert got == _LABEL_WANT
+
+
+def test_dedup_group_labels_job_count(spark):
+    """Each label round is one pinned aggregate whose convergence count
+    is observed on the pin itself — no separate emptiness job. The
+    8-pair graph took 44 jobs with a join → aggregate → join → pin →
+    isEmpty round; the fused round keeps it well under 30."""
+    from async_pipes_spark.functions.dedup import dedup_group_labels
+
+    pairs = spark.createDataFrame(_LABEL_PAIRS, "doc_a bigint, doc_b bigint")
+    jobs = _jobs_launched(spark, lambda: dedup_group_labels(pairs))
+    assert 0 < jobs <= 30, jobs
+
+
+def test_dedup_group_labels_reliable_checkpoint_parity(spark, tmp_path):
+    """Under reliable checkpoint(eager=True) the observed convergence
+    count still arrives: the same graph gives the same labels, and the
+    rounds' state lands in the checkpoint directory."""
+    from pathlib import Path
+
+    from async_pipes_spark.functions.dedup import dedup_group_labels
+    from async_pipes_spark.session import (
+        disable_reliable_checkpoints,
+        enable_reliable_checkpoints,
+    )
+
+    ckdir = tmp_path / "ck"
+    enable_reliable_checkpoints(spark, str(ckdir))
+    try:
+        pairs = spark.createDataFrame(_LABEL_PAIRS, "doc_a bigint, doc_b bigint")
+        got = {(r.doc_id, r.keep_id) for r in dedup_group_labels(pairs).collect()}
+        assert got == _LABEL_WANT
+        assert any(p.is_file() for p in Path(ckdir).rglob("*")), (
+            "reliable checkpoint wrote nothing to the configured dir"
+        )
+    finally:
+        disable_reliable_checkpoints(spark)
 
 
 def test_bloom_filter_deterministic_and_mergeable(spark):
@@ -371,15 +426,13 @@ def test_bloom_rejects_ragged_num_bits(spark):
         bloom_build(spark.range(3), ["id"], num_bits=1001)
 
 
-def test_star_contraction_equals_minlabel_on_random_graphs(spark):
-    """large-star/small-star must produce the identical (doc_id,
-    keep_id) map as min-label propagation on assorted random graphs."""
+def test_dedup_group_labels_equals_union_find_on_random_graphs(spark):
+    """Pointer-jumping min-label must produce the same (doc_id,
+    keep_id) map as a union-find on assorted random graphs, duplicate
+    pairs and a self-loop pair included."""
     import random
 
-    from async_pipes_spark.functions.dedup import (
-        connected_components_star,
-        dedup_group_labels,
-    )
+    from async_pipes_spark.functions.dedup import dedup_group_labels
 
     rng = random.Random(7)
     for trial in range(4):
@@ -388,24 +441,23 @@ def test_star_contraction_equals_minlabel_on_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(10, 80))
         ]
         edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
+        edges += edges[:3] + [(b, a) for a, b in edges[3:5]] + [(n + trial, n + trial)]
         pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-        star = {(r.doc_id, r.keep_id) for r in connected_components_star(pairs).collect()}
-        lbl = {(r.doc_id, r.keep_id) for r in dedup_group_labels(pairs).collect()}
-        assert star == lbl, f"trial {trial}: {sorted(star ^ lbl)[:6]}"
+        got = {(r.doc_id, r.keep_id) for r in dedup_group_labels(pairs).collect()}
+        want = _union_find_labels(edges)
+        assert got == want, f"trial {trial}: {sorted(got ^ want)[:6]}"
 
 
-def test_star_contraction_handles_deep_chain(spark):
-    """A 300-vertex chain has diameter 299: min-label would need 299
-    rounds (its cap raises), star contraction needs O(log n)
-    alternations — every vertex must resolve to keep_id 0."""
-    from async_pipes_spark.functions.dedup import connected_components_star
+def test_dedup_group_labels_resolves_deep_chain(spark):
+    """A 300-vertex chain has diameter 299: plain min-label needs 299
+    rounds (past the default cap of 64); pointer jumping needs
+    O(log diameter) — every vertex must resolve to keep_id 0."""
+    from async_pipes_spark.functions.dedup import dedup_group_labels
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(299)], "doc_a bigint, doc_b bigint"
     )
-    got = {(r.doc_id, r.keep_id) for r in connected_components_star(chain).collect()}
+    got = {(r.doc_id, r.keep_id) for r in dedup_group_labels(chain).collect()}
     assert got == {(i, 0) for i in range(300)}
 
 
