@@ -51,7 +51,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from async_pipes_spark.sources.sinks import (
-    _mor_backlog_bytes,
+    _mor_delta_keys,
     _read_immutable_dir,
     _read_immutable_dirs,
     _mor_resolve,
@@ -223,9 +223,7 @@ def mor_changes(
         return df.where(~F.col(tomb)) if tomb else df
 
     has_null_key = reduce(Column.__or__, [F.col(k).isNull() for k in keys])
-    dkeys = dunion.where(~has_null_key).select(*keys).distinct()
-    if _mor_backlog_bytes(spark, path, deltas) <= 256 * 1024 * 1024:
-        dkeys = F.broadcast(dkeys)
+    dkeys = _mor_delta_keys(spark, path, deltas, dunion, keys)
 
     # contested-slice base scan, file-pruned when key sidecars allow
     # (flat manifests; the partitioned flavor's mapping read is

@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -807,6 +808,23 @@ def _mor_backlog_bytes(spark, path: str, deltas: Sequence[str]) -> int:
     return total
 
 
+def _mor_delta_keys(
+    spark, path: str, deltas: Sequence[str], dunion: DataFrame,
+    keys: Sequence[str],
+) -> DataFrame:
+    """The backlog's non-NULL delta keys: the build side of the
+    resolver's and the CDC feed's semi/anti joins, broadcast under
+    :data:`_MOR_BROADCAST_MAX_BYTES`. No ``distinct``: a semi or anti
+    join returns the same rows whatever the build side's duplicates,
+    so deduplicating would only cost a shuffle."""
+    dkeys = dunion.where(
+        reduce(Column.__and__, [F.col(k).isNotNull() for k in keys])
+    ).select(*keys)
+    if _mor_backlog_bytes(spark, path, deltas) <= _MOR_BROADCAST_MAX_BYTES:
+        dkeys = F.broadcast(dkeys)
+    return dkeys
+
+
 def _mor_resolve(
     spark,
     path: str,
@@ -831,14 +849,16 @@ def _mor_resolve(
       version tuple desc, then later-source-wins (base < older delta <
       newer delta — the associative form of COW's update-beats-
       incumbent tie rule), then the write-era full-row-hash tiebreak.
-      Only this (small) slice shuffles.
+      One keyed window over this slice is the resolve's only shuffle.
     - with NO version columns the replace is unconditional — a base
       row NEVER wins a contested key — so the contested side needs no
       base rows at all: winners are the max-source delta rows per key.
     - NULL-key rows replay COW's join semantics (NULL never matches):
       base NULL-key rows always survive; each delta's NULL-key rows
-      resolve only among themselves (versioned spec) or pass through
-      (unversioned, matching COW's no-dedup-within-batch union).
+      resolve in the same keyed window, partitioned by their source
+      too, so only a batch's own rows with an equal key compete
+      (versioned spec), or pass through (unversioned, matching COW's
+      no-dedup-within-batch union).
 
     The tiebreak hash covers each row's WRITE-ERA column set (recorded
     in the delta's ``_spec``; base rows use the first delta's era —
@@ -862,8 +882,6 @@ def _mor_resolve(
     delta-touched key (:func:`~async_pipes_spark.sources.stats.
     _mor_contested_plan`), the equality-delete→data-file mapping
     Iceberg keeps in metadata, recovered here from the blooms."""
-    from functools import reduce
-
     from pyspark.sql import Window
 
     keys, vers, tomb, _ = _read_mor_spec(spark, path, deltas[0])
@@ -950,47 +968,36 @@ def _mor_resolve(
             cols.append(F.col("_src"))
         return df.select(*cols)
 
-    has_null_key = reduce(
-        Column.__or__, [F.col(k).isNull() for k in keys]
-    )
-    dkeys = dunion.filter(~has_null_key).select(*keys).distinct()
-    small_backlog = (
-        _mor_backlog_bytes(spark, path, deltas) <= _MOR_BROADCAST_MAX_BYTES
-    )
-    if small_backlog:
-        dkeys = F.broadcast(dkeys)
+    has_null_key = reduce(Column.__or__, [F.col(k).isNull() for k in keys])
+    dkeys = _mor_delta_keys(spark, path, deltas, dunion, keys)
     # untouched branch: ONE anti-join, ONE base scan — no window, no
     # dedup, no shuffle (broadcast build side). NULL-key base rows
     # survive through the anti-join itself (NULL matches no delta key —
     # the same join semantics that carry them through COW's keep side)
     untouched = norm(kept_src.join(dkeys, list(keys), "left_anti"))
-    d_main = norm(dunion.filter(~has_null_key))
-    d_null = norm(dunion.filter(has_null_key))
     if not vers:
         # unconditional replace: ALL rows of the newest delta
         # containing the key survive (COW's keep ∪ updates does not
         # dedup within a batch); base rows of contested keys die, so
-        # the contested side never reads the base
-        mx = d_main.groupBy(*keys).agg(F.max("_src").alias("_mx"))
-        if small_backlog:
-            mx = F.broadcast(mx)
+        # the contested side never reads the base. NULL-key rows all
+        # pass through (COW's union carries them verbatim)
+        newest = F.max("_src").over(Window.partitionBy(*keys))
         winners = (
-            d_main.join(mx, list(keys))
-            .where(F.col("_src") == F.col("_mx"))
+            norm(dunion)
+            .withColumn("_mx", newest)
+            .where(has_null_key | (F.col("_src") == F.col("_mx")))
             .drop("_src", "_mx")
         )
-        return untouched.unionByName(winners).unionByName(
-            d_null.drop("_src")
-        )
+        return untouched.unionByName(winners)
     # versioned spec: contested base rows CAN win (stale delta) — pull
     # exactly the touched slice of the full base through the window
-    # (no null-key filter needed: a NULL key matches nothing in a semi
-    # join, so the touched slice is non-null-keyed by construction)
+    # (a NULL key matches nothing in a semi join, so the touched slice
+    # is non-null-keyed by construction)
     cb_src = contested_base if contested_base is not None else base
     cbase = norm(
         cb_src.withColumn("_src", F.lit(0)).join(dkeys, list(keys), "left_semi")
     )
-    contested = cbase.unionByName(d_main)
+    contested = cbase.unionByName(norm(dunion))
     tiebreak = []
     if not any("map<" in t for c, t in contested.dtypes if c != "_src"):
         # write-era sorted-column struct = the same canonical hash
@@ -1008,24 +1015,20 @@ def _mor_resolve(
         for i, era in enumerate(eras, start=1):
             tb = F.when(F.col("_src") == i, era_hash(era)).otherwise(tb)
         tiebreak = [tb.desc()]
-    w = Window.partitionBy(*keys).orderBy(
+    # ONE window resolves every contested row. A NULL-key delta row
+    # resolves only among its own batch's rows with the same key
+    # (NULL never matches across a COW merge): its source joins the
+    # partition key, so it never shares a partition with a non-null
+    # key, and inside its partition the _src order term is constant
+    w = Window.partitionBy(*keys, F.when(has_null_key, F.col("_src"))).orderBy(
         *[F.col(c).desc() for c in vers], F.col("_src").desc(), *tiebreak
     )
-    resolved_main = (
+    resolved = (
         contested.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
-    # NULL-key delta rows: resolve within their own batch only
-    wn = Window.partitionBy(*keys, "_src").orderBy(
-        *[F.col(c).desc() for c in vers], *tiebreak
-    )
-    resolved_null = (
-        d_null.withColumn("_rn", F.row_number().over(wn))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-    return untouched.unionByName(resolved_main).unionByName(resolved_null)
+    return untouched.unionByName(resolved)
 
 
 def mor_upsert(
@@ -1229,8 +1232,6 @@ def _prune_to_partitions(df, rows, partition_by) -> DataFrame:
     Beyond: the driver-built expression tree is linear in partition
     count, so it switches to a broadcast null-safe semi join (O(1)
     plan size; dynamic pruning where available)."""
-    from functools import reduce
-
     if len(rows) <= 64:
         pred = reduce(
             Column.__or__,
@@ -1948,8 +1949,6 @@ def merge_upsert(
         # target; callers whose partition values are derived from the
         # key (so keys never move) can skip it with
         # ``keys_partition_stable=True`` and prune purely from updates.
-        from functools import reduce
-
         touched_df = updates.select(*partition_by)
         if not keys_partition_stable:
             moved = existing.join(up_keys, list(key_cols), "left_semi").select(

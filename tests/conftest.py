@@ -9,6 +9,8 @@ import decimal
 import hashlib
 import math
 import os
+import time
+import uuid
 
 import duckdb
 import pytest
@@ -23,6 +25,28 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("async-pipes-spark-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
+
+
+def jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group. A
+    sentinel job in a second group is awaited first: the status
+    listener sees events in order, so once the sentinel shows, every
+    job ``fn`` launched shows too."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    tracker = sc.statusTracker()
+    sc.setJobGroup(f"{tag}-fn", "fn")
+    try:
+        fn()
+        sc.setJobGroup(f"{tag}-sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never showed"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(f"{tag}-fn"))
 
 
 @pytest.fixture(scope="session")

@@ -13,6 +13,8 @@ manifest flavors, schema evolution, and the plan/pruning shape.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import random
 from collections import Counter
 
@@ -23,11 +25,14 @@ from async_pipes_spark.sources.cdc import mor_changes
 from async_pipes_spark.sources.sinks import (
     compact_small_files,
     merge_upsert,
+    mor_deltas,
     mor_upsert,
     read_table,
     write_manifest_table,
     write_partitioned_manifest_table,
 )
+
+from tests.conftest import jobs_launched
 
 SCHEMA = "k bigint, ver bigint, s string, dead boolean"
 COLS = ("k", "ver", "s", "dead")
@@ -281,8 +286,10 @@ def test_mor_changes_null_keys(spark, tmp_path):
 
 def test_mor_changes_pin_job_count(spark, tmp_path):
     """Pinning one feed of a versioned delta over a flat manifest table
-    costs 6 Spark jobs: one keyed window pass classifies every changed
-    key, with no per-change-type joins against a broadcast key table."""
+    costs 4 Spark jobs: one keyed window pass classifies every changed
+    key, and the resolver under it runs one shuffle — the delta keys
+    are broadcast without a distinct, and NULL-key rows resolve in the
+    keyed window."""
     from async_pipes_spark.session import pin
 
     path = str(tmp_path / "t")
@@ -298,21 +305,108 @@ def test_mor_changes_pin_job_count(spark, tmp_path):
         key_cols=["k"], version_cols=["ver"], tombstone_col="dead",
     )
     feed = mor_changes(spark, path)
-    sc = spark.sparkContext
-    sc.setJobGroup("test_cdc.pin_job_count", "pin one CDC feed")
-    try:
-        pinned = pin(feed)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("test_cdc.pin_job_count")
-    assert _feed_counter(pinned) == Counter({
+    pinned = []
+    jobs = jobs_launched(spark, lambda: pinned.append(pin(feed)))
+    assert _feed_counter(pinned[0]) == Counter({
         (3, 0, "i3", False, "update_preimage"): 1,
         (3, 1, "u3", False, "update_postimage"): 1,
         (4, 0, "i4", False, "delete"): 1,
         (25, 1, "n25", False, "insert"): 1,
         (None, 1, "nk", False, "insert"): 1,
     })
-    assert len(jobs) == 6, sorted(jobs)
+    assert jobs == 4, jobs
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def test_mor_broadcast_gate_lane_parity(spark, tmp_path, monkeypatch):
+    """The resolver and the feed return the same rows whether the delta
+    keys are broadcast (default gate) or joined by sort-merge (gate
+    forced to 0, automatic broadcast off). The backlog repeats keys
+    within a delta and across deltas, carries NULL-key rows in two
+    deltas on a composite key with one NULL component, and ties equal
+    versions — the non-distinct semi/anti joins and the NULL-key rows
+    resolved in the keyed window, on both lanes."""
+    import async_pipes_spark.sources.sinks as sinks_mod
+
+    schema = "k bigint, g string, ver bigint, s string, dead boolean"
+    cols = ("k", "g", "ver", "s", "dead")
+    path = str(tmp_path / "t")
+    base = [
+        (1, "a", 0, "a0", False), (1, "a", 0, "a0_dup", False),
+        (2, "b", 0, "b0", False), (3, "c", 5, "c0", False),
+        (None, "x", 0, "base_nk", False), (4, None, 0, "base_ng", False),
+        (9, "z", 0, "z0", False),
+    ]
+    write_manifest_table(spark, spark.createDataFrame(base, schema), path)
+    for batch in (
+        [
+            (1, "a", 2, "a2", False), (1, "a", 3, "a3", False),
+            (2, "b", 1, "b1", False),
+            (None, "x", 4, "nk_lo", False), (None, "x", 6, "nk_hi", False),
+            (5, None, 1, "ng5", False),
+            (7, "g", 1, "g1", False),
+            (8, "h", 1, "h_x", False), (8, "h", 1, "h_y", False),
+        ],
+        [
+            (1, "a", 1, "a_stale", False),
+            (2, "b", 1, "b1_tie", False),    # equal version: later delta wins
+            (3, "c", 5, "c_tie", False),     # equal version: delta beats base
+            (None, "x", 1, "nk2", False),    # own batch: survives beside nk_hi
+            (5, None, 0, "ng5_2", False),
+            (7, "g", 2, "g_dead", True),
+        ],
+    ):
+        mor_upsert(
+            spark, path, spark.createDataFrame(batch, schema),
+            key_cols=["k", "g"], version_cols=["ver"], tombstone_col="dead",
+        )
+    first = mor_deltas(spark, path)[0]
+
+    def lane():
+        return (
+            Counter(tuple(r) for r in read_table(spark, path).select(*cols).collect()),
+            _feed_counter(mor_changes(spark, path), cols),
+            _feed_counter(mor_changes(spark, path, since=first), cols),
+            _plan(read_table(spark, path)),
+        )
+
+    read_b, feed_b, inc_b, plan_b = lane()
+    monkeypatch.setattr(sinks_mod, "_MOR_BROADCAST_MAX_BYTES", 0)
+    confs = ("spark.sql.autoBroadcastJoinThreshold",
+             "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {c: spark.conf.get(c, None) for c in confs}
+    try:
+        for c in confs:
+            spark.conf.set(c, "-1")
+        read_s, feed_s, inc_s, plan_s = lane()
+    finally:
+        for c, v in saved.items():
+            if v is None:
+                spark.conf.unset(c)
+            else:
+                spark.conf.set(c, v)
+    assert "BroadcastHashJoin" in plan_b, plan_b
+    assert "BroadcastHashJoin" not in plan_s and "SortMergeJoin" in plan_s, plan_s
+    assert read_s == read_b
+    assert feed_s == feed_b
+    assert inc_s == inc_b
+    live = +Counter({r: n for r, n in read_b.items() if not r[4]})
+    h = [r for r in live if r[0] == 8]
+    assert len(h) == 1 and h[0][3] in ("h_x", "h_y"), h
+    assert live == Counter({
+        (1, "a", 3, "a3", False): 1, (2, "b", 1, "b1_tie", False): 1,
+        (3, "c", 5, "c_tie", False): 1, (None, "x", 0, "base_nk", False): 1,
+        (4, None, 0, "base_ng", False): 1, (9, "z", 0, "z0", False): 1,
+        (None, "x", 6, "nk_hi", False): 1, (None, "x", 1, "nk2", False): 1,
+        (5, None, 1, "ng5", False): 1, (5, None, 0, "ng5_2", False): 1,
+        h[0]: 1,
+    })
 
 
 def test_mor_changes_empty_backlog_schema(spark, tmp_path):

@@ -37,6 +37,8 @@ from async_pipes_spark.sources.sinks import (
     write_manifest_table,
 )
 
+from tests.conftest import jobs_launched
+
 SCHEMA = "k bigint, ver bigint, s string, dead boolean"
 
 
@@ -807,6 +809,41 @@ def test_mor_unversioned_contested_never_scans_base(spark, tmp_path):
         if ln.strip().startswith("Location") and base_v in ln
     )
     assert base_scans == 1, plan
+
+
+@pytest.mark.parametrize("versioned", [True, False])
+def test_mor_read_job_count(spark, tmp_path, versioned):
+    """A resolved read runs one shuffle under either spec: the delta
+    keys are broadcast without a distinct, and one keyed window
+    resolves the contested rows (NULL-key delta rows included). A
+    20-row base plus a 4-row delta with a NULL key and a tombstone
+    collects in 3 jobs; with a distinct over the keys and a second
+    pass (a NULL-key window, or a max-source aggregate joined back)
+    it took 5."""
+    tgt = str(tmp_path / "t")
+    write_manifest_table(
+        spark,
+        spark.createDataFrame([(k, 0, f"i{k}", False) for k in range(20)], SCHEMA),
+        tgt,
+    )
+    spec = {"version_cols": ["ver"], "tombstone_col": "dead"} if versioned else {}
+    mor_upsert(
+        spark, tgt,
+        spark.createDataFrame(
+            [(3, 1, "u3", False), (4, 1, None, True), (25, 1, "n25", False),
+             (None, 1, "nk", False)],
+            SCHEMA,
+        ),
+        ["k"], **spec,
+    )
+    # the first read infers the delta dir's schema once (one more job)
+    read_manifest_table(spark, tgt).collect()
+    rows = []
+    jobs = jobs_launched(
+        spark, lambda: rows.extend(read_manifest_table(spark, tgt).collect())
+    )
+    assert len(rows) == 22, rows
+    assert jobs <= 3, jobs
 
 
 def test_mor_backlog_scan_prunes_base_files(spark, tmp_path):

@@ -4,7 +4,6 @@ partitions option, SQL entry point."""
 
 import contextlib
 import io
-import time
 import uuid
 
 import pyarrow as pa
@@ -15,7 +14,7 @@ from async_pipes_spark.operators.skew import salted_aggregate
 from async_pipes_spark.sources.sinks import write_bucketed_table
 from async_pipes_spark.sources.tables import load_table, register_views
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_launched
 
 
 def _plan(df):
@@ -134,34 +133,12 @@ def test_sql_entry_point(spark):
     assert got == direct
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a job group. A
-    sentinel job in a second group is awaited first: the status
-    listener sees events in order, so once the sentinel shows, every
-    job ``fn`` launched shows too."""
-    sc = spark.sparkContext
-    tag = uuid.uuid4().hex
-    tracker = sc.statusTracker()
-    sc.setJobGroup(f"{tag}-fn", "fn")
-    try:
-        fn()
-        sc.setJobGroup(f"{tag}-sentinel", "sentinel")
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(f"{tag}-sentinel"):
-        assert time.monotonic() < deadline, "sentinel job never showed"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(f"{tag}-fn"))
-
-
 def test_load_table_schema_memo_skips_inference_job(spark, tmp_path):
     """Only the first load of a file version infers its schema (one
     footer job); a second load of the unchanged file launches none."""
     pq.write_table(pa.table({"a": [1, 2, 3]}), str(tmp_path / "t.parquet"))
-    first = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "t"))
-    second = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    first = jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    second = jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "t"))
     assert first >= 1 and second == 0, (first, second)
     assert sorted(load_table(spark, str(tmp_path), "t").collect()) == [(1,), (2,), (3,)]
 
@@ -203,7 +180,7 @@ def test_load_table_schema_memo_hit_matches_inference(spark, tmp_path):
         path = f"{d}/{name}.parquet"
         read_parquet_table(spark, path)
         assert path in _SCHEMA_MEMO
-        hit = _jobs_launched(spark, lambda: read_parquet_table(spark, path).schema)
+        hit = jobs_launched(spark, lambda: read_parquet_table(spark, path).schema)
         assert hit == 0, (name, hit)
         assert read_parquet_table(spark, path).schema == spark.read.parquet(path).schema
 
@@ -370,7 +347,7 @@ def test_dedup_group_labels_job_count(spark):
     from async_pipes_spark.functions.dedup import dedup_group_labels
 
     pairs = spark.createDataFrame(_LABEL_PAIRS, "doc_a bigint, doc_b bigint")
-    jobs = _jobs_launched(spark, lambda: dedup_group_labels(pairs))
+    jobs = jobs_launched(spark, lambda: dedup_group_labels(pairs))
     assert 0 < jobs <= 30, jobs
 
 
