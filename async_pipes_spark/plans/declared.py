@@ -25,47 +25,12 @@ the contract). At 100 TB the same fusion is simply free latency.
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from async_pipes_spark.operators.iterate import iterate_inplace
 from async_pipes_spark.sources.tables import load_table
 
-#: (applicationId, sf_dir, query name) → built DataFrame. A DataFrame
-#: is an immutable LAZY plan: reusing it re-reads the parquet and
-#: re-executes the query on every action — only the fixed
-#: build/analysis cost (~50-100 ms of py4j + eager per-op Catalyst
-#: analysis, BASELINE.md's decomposition) is amortized, exactly like a
-#: prepared statement (DuckDB re-parses in <1 ms; this is Spark's
-#: equivalent). Queries whose construction RUNS jobs (p8's fixpoint
-#: materializes its converged frame) must NOT use this — caching them
-#: would reuse results, not plans.
-#: OPT-IN ONLY (``SPARK_GRAFT_BLOCK_CACHE=1`` — bench.py sets it over
-#: the immutable testdata): a cached DataFrame pins the parquet FILE
-#: LISTING from first build, so overwriting a source directory in the
-#: same application would fail on deleted part files or silently miss
-#: new ones. Re-execution of file CONTENTS per action is safe; directory
-#: re-listing is what the cache skips.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _plan_cached(fn):
-    import os
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        if os.environ.get("SPARK_GRAFT_BLOCK_CACHE") != "1":
-            return fn(spark, sf_dir)
-        key = (spark.sparkContext.applicationId, sf_dir, fn.__name__)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_CACHE[key] = df
-        return df
-
-    return wrapper
 
 #: SQL twin of functions.money.cents(): exact BIGINT cents of a
 #: 2-decimal double column.
@@ -87,7 +52,6 @@ def _micro_sql(expr: str) -> str:
     return f"CAST(FLOOR(CAST({expr} AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT)"
 
 
-@_plan_cached
 def p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row revenue map (reference `with_stage` pure map,
     src/pipeline/builder.rs:202-224). Narrow, no shuffle at any scale."""
@@ -99,7 +63,6 @@ def p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def p2_filter_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter-drop + fold (reference stage returning None to drop,
     builder.rs:194-196; shared-state fold lib.rs:140-187). The predicate
@@ -113,7 +76,6 @@ def p2_filter_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def p3_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flattener (reference `with_flattener`, builder.rs:336-364) →
     posexplode. pos+1 matches DuckDB's 1-based generate_subscripts."""
@@ -125,7 +87,6 @@ def p3_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def p4_route_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Branch/route by order status + per-branch fold (reference
     `with_branching_stage`, builder.rs:251-282). Routing N ways + folding
@@ -138,7 +99,6 @@ def p4_route_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def p5_fan_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fan-in union (many writers, one pipe — reference
     tests/pipeline_tests.rs:220-273) + fold, routed through the FLUENT
@@ -169,7 +129,6 @@ def p5_fan_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res["folded"]
 
 
-@_plan_cached
 def p6_map_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference README's map-reduce shape (README.md:21-54):
     map each record, fold into one total."""
@@ -182,7 +141,6 @@ def p6_map_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def p7_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful stage / running fold (reference shared-state pattern,
     lib.rs:152-187) as a window frame. One shuffle on o_custkey; at
@@ -246,7 +204,6 @@ def p8_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.selectExpr("o_orderkey", "CAST(n AS BIGINT) AS steps")
 
 
-@_plan_cached
 def p9_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window (batch form; the streaming
     twin in streaming/ uses window() + watermark and must agree)."""
@@ -261,7 +218,6 @@ def p9_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def x1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash — the baseline dedup operator.
     One shuffle on the hash; at 100 TB use this shape verbatim
@@ -274,7 +230,6 @@ def x1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def x2_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-1 cosine neighbor for a bounded query set.
 
@@ -299,7 +254,6 @@ def x2_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def x3_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language text analysis fold: counts, chars, whitespace
     tokens, keyword hits — all JVM-side string functions."""
@@ -312,7 +266,6 @@ def x3_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def x4_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-minute gap rule via lag() — the batch
     twin of streaming session_window. One shuffle on user_id (explicit
@@ -334,7 +287,6 @@ def x4_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def x5_json_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction + bucketing (semi-structured props column).
     The two-lane extractor (functions.json.json_get_int, inlined here
@@ -358,7 +310,6 @@ def x5_json_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_plan_cached
 def x6_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join + top-k. Pre-aggregate orders by custkey BEFORE the join
     (shrinks the join's left side to #customers), then broadcast-join

@@ -2150,6 +2150,13 @@ def s20_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_upsert with version_cols — last-writer-wins on
     (ts, event_id)).
 
+    The lake is a MANIFEST TABLE (sources.sinks.write_manifest_table,
+    the one mutable-table format): each micro-batch's versioned merge
+    lands as a fresh immutable ``_data/v_*`` dir and a single-object
+    pointer replace — the commit protocol an unpartitioned lake needs
+    on an object store. The contract registers this one body under
+    two names, s20_stream_cdc_upsert and s23_stream_cdc_manifest.
+
     The lake is seeded from the historical half of events; the rest
     arrives as a 4-file stream drained one file per micro-batch
     (WorkerOptions backpressure), each batch merging into the lake.
@@ -2162,7 +2169,11 @@ def s20_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from async_pipes_spark.session import ensure_engine_confs
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import (
+        merge_upsert,
+        read_table,
+        write_manifest_table,
+    )
 
     base = tempfile.mkdtemp(prefix="s20_cdc_")
     lake = f"{base}/lake"
@@ -2188,7 +2199,7 @@ def s20_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    seed.write.mode("overwrite").parquet(lake)
+    write_manifest_table(session, seed, lake)
 
     # the live half, staged as a 4-file directory so the file source
     # actually produces several micro-batches (user_id-hash split:
@@ -2227,7 +2238,7 @@ def s20_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # incoming files, stream checkpoint — can be removed NOW instead of
     # leaking a copy of the table per invocation
     out = (
-        session.read.parquet(lake)
+        read_table(session, lake)
         .select(*cols)
         .orderBy("user_id")
         .transform(_pin)
@@ -2237,8 +2248,8 @@ def s20_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def s22_stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC with DELETES: s20's streaming lake merge where an 'error'
-    event tombstones the user's state (merge_upsert with
+    """CDC with DELETES: s20's streaming manifest-table merge where an
+    'error' event tombstones the user's state (merge_upsert with
     tombstone_col + retained soft tombstones). Because the delete
     rides the same last-writer-wins window and keeps its version, the
     live view at quiescence equals "users whose globally-latest event
@@ -2248,7 +2259,11 @@ def s22_stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from async_pipes_spark.session import ensure_engine_confs
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import (
+        merge_upsert,
+        read_table,
+        write_manifest_table,
+    )
 
     base = tempfile.mkdtemp(prefix="s22_cdc_")
     lake = f"{base}/lake"
@@ -2270,7 +2285,7 @@ def s22_stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_rn")
         .withColumn("dead", dead)
     )
-    seed.write.mode("overwrite").parquet(lake)
+    write_manifest_table(session, seed, lake)
 
     incoming = f"{base}/incoming"
     ev.filter(F.col("event_id") >= 5000).repartition(4, "user_id").write.mode(
@@ -2298,81 +2313,8 @@ def s22_stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     out = (
-        session.read.parquet(lake)
+        read_table(session, lake)
         .filter(~F.coalesce(F.col("dead"), F.lit(False)))
-        .select(*cols)
-        .orderBy("user_id")
-        .transform(_pin)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
-def s23_stream_cdc_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s20's streaming CDC merge, committed through a MANIFEST TABLE
-    (sources.sinks.write_manifest_table): each micro-batch's versioned
-    merge lands as a fresh immutable ``_data/v_*`` dir and a
-    single-object pointer replace — the commit protocol an
-    UNPARTITIONED lake needs on an object store, where the local-FS
-    directory swap s20's shape would use does not exist. Quiescence
-    contract is identical: the live version equals the global per-user
-    argmax in any batch order."""
-    import shutil
-    import tempfile
-
-    from async_pipes_spark.session import ensure_engine_confs
-    from async_pipes_spark.sources.sinks import (
-        merge_upsert,
-        read_manifest_table,
-        write_manifest_table,
-    )
-
-    base = tempfile.mkdtemp(prefix="s23_cdc_")
-    lake = f"{base}/lake"
-    cols = ["user_id", "ts", "event_id", "event_type", "value"]
-
-    from pyspark.sql import Window
-
-    session = spark.newSession()
-    ensure_engine_confs(session)
-    session.conf.set("spark.sql.shuffle.partitions", "8")
-
-    ev = load_table(session, sf_dir, "events").select(*cols)
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    seed = (
-        ev.filter(F.col("event_id") < 5000)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    write_manifest_table(session, seed, lake)
-
-    incoming = f"{base}/incoming"
-    ev.filter(F.col("event_id") >= 5000).repartition(4, "user_id").write.mode(
-        "overwrite"
-    ).parquet(incoming)
-
-    def upsert(batch: DataFrame, _batch_id: int) -> None:
-        merge_upsert(
-            batch.sparkSession,
-            lake,
-            batch,
-            key_cols=["user_id"],
-            version_cols=["ts", "event_id"],
-        )
-
-    q = (
-        session.readStream.schema(session.read.parquet(incoming).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(incoming)
-        .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{base}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        read_manifest_table(session, lake)
         .select(*cols)
         .orderBy("user_id")
         .transform(_pin)
@@ -3535,7 +3477,8 @@ def s21_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     spend rollup kept current under streaming appends. Each micro-batch
     reduces to its own partial aggregate (tiny — touched keys only),
     combines with the view's current values for those keys, and MERGEs
-    the combined rows back (sources.sinks.merge_upsert) — the standard
+    the combined rows back into the view's manifest table
+    (sources.sinks.merge_upsert) — the standard
     delta-maintenance shape for any commutative-monoid aggregate
     (count/sum here), which makes the refresh batch-order-invariant:
     quiescence equals the one-shot batch GROUP BY over all history.
@@ -3546,7 +3489,11 @@ def s21_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from async_pipes_spark.functions.money import cents
     from async_pipes_spark.session import ensure_engine_confs
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import (
+        merge_upsert,
+        read_table,
+        write_manifest_table,
+    )
 
     base = tempfile.mkdtemp(prefix="s21_mv_")
     view = f"{base}/view"
@@ -3564,7 +3511,7 @@ def s21_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     ev = load_table(session, sf_dir, "events").select("user_id", "ts", "event_id", "value")
-    rollup(ev.filter(F.col("event_id") < 5000)).write.mode("overwrite").parquet(view)
+    write_manifest_table(session, rollup(ev.filter(F.col("event_id") < 5000)), view)
 
     incoming = f"{base}/incoming"
     ev.filter(F.col("event_id") >= 5000).repartition(3, "user_id").write.mode(
@@ -3574,7 +3521,7 @@ def s21_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     def refresh(batch: DataFrame, _batch_id: int) -> None:
         sess = batch.sparkSession
         delta = rollup(batch).alias("d")
-        cur = sess.read.parquet(view).alias("v")
+        cur = read_table(sess, view).alias("v")
         keys = ["user_id", "bucket"]
         combined = delta.join(cur, keys, "left").select(
             *keys,
@@ -3599,7 +3546,7 @@ def s21_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     q.awaitTermination()
     out = (
-        session.read.parquet(view)
+        read_table(session, view)
         .orderBy("user_id", "bucket")
         .transform(_pin)
     )
@@ -4220,7 +4167,7 @@ EXTENSION_QUERIES = {
     "s20_stream_cdc_upsert": s20_stream_cdc_upsert,
     "s21_stream_incremental_rollup": s21_stream_incremental_rollup,
     "s22_stream_cdc_deletes": s22_stream_cdc_deletes,
-    "s23_stream_cdc_manifest": s23_stream_cdc_manifest,
+    "s23_stream_cdc_manifest": s20_stream_cdc_upsert,
     "s24_stream_cdc_partitioned_manifest": s24_stream_cdc_partitioned_manifest,
     "s28_concurrent_stream_writers": s28_concurrent_stream_writers,
     "s30_stream_mor_upsert": s30_stream_mor_upsert,

@@ -12,6 +12,17 @@ Layout knobs that matter at 100 TB:
   ``saveAsTable``).
 - ``target_file_rows``: coalesce/repartition so output files land near
   a target size instead of one-file-per-task dust.
+
+Mutable tables have ONE format: the manifest table, flat
+(:func:`write_manifest_table`) or partitioned
+(:func:`write_partitioned_manifest_table`). Immutable ``_data``
+version dirs plus a commit log give every read-modify-write verb
+(:func:`merge_upsert`, :func:`mor_upsert`, :func:`purge_tombstones`,
+:func:`compact_small_files`, :func:`optimize_zorder`) optimistic
+concurrency, time travel and object-store-safe commits. Those verbs
+raise ``ValueError`` on a plain parquet directory; plain directories
+stay readable (:func:`read_table`) and writable whole
+(:func:`write_files`).
 """
 
 from __future__ import annotations
@@ -70,55 +81,6 @@ def write_bucketed_table(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def _swap_directories(target_path: str, staging: str) -> None:
-    """Publish ``staging`` as ``target_path`` (copy-on-write commit for
-    a LOCAL filesystem). POSIX cannot atomically replace a non-empty
-    directory, so this is two renames with a microsecond window between
-    them; the long-running part (the write) never touches the target,
-    and staging/backup are cleaned up whether or not the swap runs.
-    On object stores (S3/HDFS) directory rename is copy-or-unsupported,
-    so non-local URIs are REJECTED here — unpartitioned tables on an
-    object store must be manifest tables (:func:`write_manifest_table`:
-    immutable versioned data dirs + a single-object pointer commit), or
-    use the partitioned dynamic-overwrite path of :func:`merge_upsert`
-    (Spark's commit protocol handles staging there)."""
-    import os
-    import re
-    import shutil
-    import uuid
-
-    def _local(p: str) -> str:
-        # Hadoop normalizes 'scheme://x' to 'scheme:/x', so BOTH slash
-        # forms must classify: a '://'-only match would let 's3a:/b/t'
-        # bypass the guard and hand os.rename a raw URI string
-        m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", p)
-        scheme = m.group(1) if m else ""
-        if scheme and scheme != "file":
-            raise ValueError(
-                f"directory-swap commit requires a local filesystem, got "
-                f"{scheme}: URI {p!r} — create the table with "
-                "write_manifest_table() (pointer-file commit, object-store-"
-                "safe) or partition it (dynamic-overwrite commit)"
-            )
-        if scheme == "file":
-            p = p[len("file:") :]
-            if p.startswith("//"):  # file:///x and file://x -> /x
-                p = p[2:] or "/"
-        return p
-
-    target_path = _local(target_path)
-    staging = _local(staging)
-    backup = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    try:
-        os.rename(staging, target_path)
-    except BaseException:
-        # roll the target back so a failed swap never loses the dataset
-        os.rename(backup, target_path)
-        raise
-    shutil.rmtree(backup)
 
 
 #: pointer file naming the live data version of a manifest table
@@ -601,9 +563,11 @@ def write_manifest_table(
     """Create (or fully rewrite) an UNPARTITIONED manifest table: data
     lives in immutable ``_data/v_*`` dirs, a ``_MANIFEST`` pointer file
     names the live one, and every commit is a single-object pointer
-    replace — the object-store-safe alternative to the local-FS
-    directory swap, serialized against concurrent writers through the
-    commit log (see :func:`_manifest_commit`). ``keep_versions`` sets the time-travel
+    replace (object-store-safe), serialized against concurrent writers
+    through the commit log (see :func:`_manifest_commit`). This (or
+    :func:`write_partitioned_manifest_table`) is how a table becomes
+    mutable: the read-modify-write verbs refuse plain parquet
+    directories. ``keep_versions`` sets the time-travel
     retention depth (stored in the pointer; later commits through
     :func:`merge_upsert` / :func:`purge_tombstones` /
     :func:`compact_small_files` inherit it; default 2 = live +
@@ -1200,10 +1164,10 @@ def _partition_subdir(partition_by, row) -> str:
     """`col=value/...` subdir for one partition tuple, Spark's naming:
     NULL and EMPTY STRING → __HIVE_DEFAULT_PARTITION__ (Spark writes
     both there); booleans → lowercase true/false (str(True) is 'True'
-    — deleting 'p=True' would silently no-op and leave the stale
-    duplicate this cleanup exists to remove); other values needing
-    Spark's path-escaping (chars outside [A-Za-z0-9._-]) are rejected
-    rather than guessed at."""
+    — a 'p=True' entry would match no mapped subdir, so a partition
+    the rewrite emptied would keep its stale mapping); other values
+    needing Spark's path-escaping (chars outside [A-Za-z0-9._-]) are
+    rejected rather than guessed at."""
     parts = []
     for c in partition_by:
         v = row[c]
@@ -1215,8 +1179,8 @@ def _partition_subdir(partition_by, row) -> str:
             s = str(v)
             if not set(s) <= _PART_SAFE:
                 raise ValueError(
-                    f"partition value {s!r} needs path escaping; emptied-"
-                    "partition cleanup supports plain alphanumeric values"
+                    f"partition value {s!r} needs path escaping; partitioned "
+                    "manifest rewrites support plain alphanumeric values"
                 )
         parts.append(f"{c}={s}")
     return "/".join(parts)
@@ -1255,24 +1219,10 @@ def _prune_to_partitions(df, rows, partition_by) -> DataFrame:
     return df.join(F.broadcast(pk), cond, "left_semi")
 
 
-def _delete_partition_dir(spark, target_path: str, partition_by, row) -> None:
-    """Remove one partition directory through the Hadoop FileSystem —
-    the same API Spark's own commit protocol uses, so it works on
-    file:// and object stores alike."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{target_path}/{_partition_subdir(partition_by, row)}"
-    )
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(p, True)
-
-
 # ---- partitioned manifest tables ------------------------------------
 #
-# The object-store-safe commit story for PARTITIONED lakes (the flat
-# manifest's commit unit is the whole table; dynamic partition
-# overwrite replaces partition dirs in place, which is not atomic on
-# object stores). Layout:
+# The commit story for PARTITIONED lakes (the flat manifest's commit
+# unit is the whole table; here it is the partition). Layout:
 #
 #   path/_MANIFEST            "#partitioned", generations live-first,
 #                             "#keep=N", "#cols=p,q"
@@ -1514,9 +1464,8 @@ def write_partitioned_manifest_table(
     keep_versions: int | None = None,
 ) -> None:
     """Create (or fully rewrite) a PARTITIONED manifest table — the
-    object-store-safe commit for partitioned lakes (dynamic partition
-    overwrite replaces directories in place; this never touches live
-    data). :func:`merge_upsert` / :func:`purge_tombstones` /
+    object-store-safe commit for partitioned lakes (a commit never
+    touches live data). :func:`merge_upsert` / :func:`purge_tombstones` /
     :func:`compact_small_files` detect the pointer and commit new
     generations through it, rewriting ONLY touched partitions per
     merge; read via :func:`read_partitioned_manifest`. Concurrent
@@ -1675,6 +1624,92 @@ def restore_manifest_table(
     _flat_pointer_commit(spark, path, make_retained)
 
 
+def _live_manifest(spark, path: str) -> tuple[str, list[str] | None, int]:
+    """(live state line, partition columns — None for a FLAT manifest —,
+    commit seq) of the manifest table a mutation verb rewrites. Every
+    read-modify-write verb commits through the commit log, so a plain
+    parquet directory (no log: no OCC, no time travel, no atomic
+    replace off the local filesystem) is refused here, before anything
+    is read or written; it stays readable through :func:`read_table`."""
+    pinfo = _pmanifest_read(spark, path)
+    if pinfo is not None:
+        gens, _, cols, seq = pinfo
+        return gens[0], cols, seq
+    states, _, seq = _manifest_read(spark, path)
+    if not states:
+        raise ValueError(
+            f"not a manifest table: {path} — create it with "
+            "write_manifest_table() or write_partitioned_manifest_table() "
+            "first (a plain parquet directory is read-only to the "
+            "mutation verbs)"
+        )
+    return states[0], None, seq
+
+
+def _check_partition_by(
+    partition_by: Sequence[str] | None, cols: list[str] | None
+) -> None:
+    """``partition_by`` must name a partitioned manifest's own columns,
+    and must be absent on a flat manifest (its commit unit is the whole
+    version)."""
+    if cols is None:
+        if partition_by:
+            raise ValueError(
+                "flat manifest tables are unpartitioned (their commit unit "
+                "is the whole version); partitioned lakes use "
+                "write_partitioned_manifest_table()"
+            )
+        return
+    if not partition_by:
+        raise ValueError(
+            f"partitioned manifest table: pass partition_by={cols} "
+            "(its commit unit is the partition)"
+        )
+    if cols and list(partition_by) != cols:
+        raise ValueError(
+            f"partition_by {list(partition_by)} != table's partition "
+            f"columns {cols}"
+        )
+
+
+def _pmanifest_rewrite(
+    spark,
+    path: str,
+    partition_by: Sequence[str],
+    live: str,
+    rows: DataFrame,
+    touched,
+    expected_seq: int,
+) -> None:
+    """Commit ``rows`` as the new contents of the ``touched`` partitions
+    (collected partition-value rows) of a partitioned manifest table:
+    they land in a fresh immutable version dir, and the new generation
+    repoints every partition the write produced at it. A touched
+    partition that got no rows (every row moved away or was purged)
+    leaves the mapping; every untouched partition keeps its mapped
+    version. One pointer claim at ``expected_seq`` commits it all —
+    a lost race raises :class:`ConcurrentCommitError` and leaves the
+    version dir for :func:`vacuum_manifest`."""
+    import uuid
+
+    # every touched subdir must be expressible BEFORE the write: an
+    # unescapable value fails the verb up front, not after the rewrite
+    touched_sds = {_partition_subdir(partition_by, r) for r in touched}
+    version = f"v_{uuid.uuid4().hex[:12]}"
+    vpath = f"{path}/_data/{version}"
+    rows.write.mode("error").partitionBy(*partition_by).parquet(vpath)
+    new_mapping = {
+        sd: v
+        for sd, v in _pmanifest_mapping(spark, path, live).items()
+        if sd not in touched_sds
+    }
+    for sd in _list_partition_subdirs(spark, vpath, len(partition_by)):
+        new_mapping[sd] = version
+    _pmanifest_commit(
+        spark, path, partition_by, new_mapping, expected_seq=expected_seq
+    )
+
+
 def merge_upsert(
     spark,
     target_path: str,
@@ -1688,13 +1723,12 @@ def merge_upsert(
     allow_schema_evolution: bool = False,
     occ_retries: int = 5,
 ) -> None:
-    """Keyed upsert into a parquet directory (MERGE semantics without a
-    table format): rows in ``updates`` replace target rows with the
-    same key; unmatched target rows survive; new keys append.
+    """Keyed upsert into a manifest table (MERGE semantics): rows in
+    ``updates`` replace target rows with the same key; unmatched target
+    rows survive; new keys append.
 
-    On a manifest table (either flavor) the merge is SAFE UNDER
-    CONCURRENT WRITERS: the commit carries the sequence number the
-    base was read at, a racing commit turns into
+    The merge is SAFE UNDER CONCURRENT WRITERS: the commit carries the
+    sequence number the base was read at, a racing commit turns into
     :class:`ConcurrentCommitError` instead of a lost update, and the
     merge automatically re-reads the new base and re-applies — up to
     ``occ_retries`` times before letting the error escape.
@@ -1715,7 +1749,7 @@ def merge_upsert(
     partitions gain the column). Readers of such a table MUST read
     with ``mergeSchema=true`` or a declared schema — Spark's default
     single-footer inference can pick a pre-tombstone file and drop the
-    flag column entirely; the engine's own reads here do so. Retention is what makes deletes
+    flag column entirely; :func:`read_table` does so. Retention is what makes deletes
     COMMUTE across batches: a hard delete forgets its version, so a
     stale upsert replayed after it would silently resurrect the key
     (this failure was caught by the permutation test, not theorized).
@@ -1738,25 +1772,27 @@ def merge_upsert(
     run through one window (rank-1 per key) instead of a plain union;
     uncontested target rows still move via the anti-join only.
 
-    Commit protocol — two paths:
+    Commit protocol — one commit log, two layouts:
 
-    - **Partitioned** (``partition_by`` given): PRUNED DYNAMIC PARTITION
-      OVERWRITE. Only the partitions that actually contain an update key
-      are read, merged, and rewritten — including the partition a moved
-      key is LEAVING (an update may change a key's partition value; the
-      old partition must rewrite too or the stale row survives as a
-      duplicate) — and every other partition's files are untouched (at
-      100 TB this is the difference between rewriting a few GB and
-      rewriting the lake). Spark's dynamic overwrite stages
-      task output through its commit protocol and deletes a replaced
-      partition only at job commit, so a failure mid-write leaves the
-      target intact — and this path is object-store-safe (no directory
-      rename; the same protocol Spark uses for INSERT OVERWRITE).
-    - **Unpartitioned**: copy-on-write — surviving target rows
-      (left_anti on the key) union the updates, written to a staging
-      directory then swapped in (:func:`_swap_directories`; local-FS
-      only, see its caveat). A failure during the write — the long
-      part — leaves the target untouched; staging is removed on error.
+    - **Flat manifest** (no ``partition_by``): copy-on-write —
+      surviving target rows (left_anti on the key) union the updates,
+      written to a fresh immutable ``_data/v_*`` version and published
+      by one commit-log claim at the base's seq.
+    - **Partitioned manifest** (``partition_by`` = the table's
+      columns): only the partitions that actually contain an update
+      key are read, merged, and rewritten into a fresh version —
+      including the partition a moved key is LEAVING (an update may
+      change a key's partition value; the old partition must rewrite
+      too or the stale row survives as a duplicate). The new
+      generation repoints them; a partition the merge emptied leaves
+      the mapping, and every other partition keeps its mapped version
+      (at 100 TB the difference between rewriting a few GB and
+      rewriting the lake).
+
+    Either way a failure mid-write leaves an orphan version dir, never
+    a broken table. A plain parquet directory raises ``ValueError``:
+    seed it with :func:`write_manifest_table` /
+    :func:`write_partitioned_manifest_table` first.
 
     ``allow_schema_evolution`` admits ADDITIVE schema change: columns
     present in ``updates`` but not in the table are added (NULL on all
@@ -1775,9 +1811,6 @@ def merge_upsert(
     O(update rows) merge-on-read delta instead (read-time resolution,
     folded by compaction).
     """
-    import shutil
-    import uuid
-
     if tombstone_col:
         if not version_cols:
             # without versions, "does the delete or the racing upsert
@@ -1786,66 +1819,29 @@ def merge_upsert(
             raise ValueError("tombstone_col requires version_cols")
         if tombstone_col not in updates.columns:
             raise ValueError(f"tombstone_col not in updates: {tombstone_col}")
-    # mergeSchema is MANDATORY when the table's files can carry
-    # different schemas (tombstone bootstrap, additive evolution — both
-    # rewrite only touched partitions): Spark's default single-footer
-    # inference can pick an old file and silently drop the newer
-    # columns — for tombstones that resurrected deleted keys (caught
-    # by live repro, not theory)
-    def _refuse_backlog(live_state: str | None) -> None:
-        # derived from the pointer read the merge ALREADY did — a
-        # standalone mor_deltas() probe here costs ~0.4 s of py4j
-        # small-file round trips per micro-batch merge (measured via
-        # the s22 A/B ratio)
-        if live_state and _state_deltas(live_state):
-            raise ValueError(
-                f"{target_path} carries outstanding merge-on-read deltas — "
-                "a copy-on-write merge would rewrite partitions WITHOUT "
-                "the backlog's rows and lose them. Either continue with "
-                "mor_upsert() or fold the backlog first "
-                "(compact_small_files / optimize_zorder)"
-            )
-
-    pinfo = _pmanifest_read(spark, target_path)
-    is_pmanifest = pinfo is not None
-    if is_pmanifest:
-        _refuse_backlog(pinfo[0][0] if pinfo[0] else None)
-        if not partition_by:
-            raise ValueError(
-                "partitioned manifest table: pass partition_by="
-                f"{pinfo[2]} (its commit unit is the partition)"
-            )
-        if pinfo[2] and list(partition_by) != pinfo[2]:
-            raise ValueError(
-                f"partition_by {list(partition_by)} != table's partition "
-                f"columns {pinfo[2]}"
-            )
-        read_path = target_path
-        is_manifest = False
-        base_seq = pinfo[3]
-        existing = read_partitioned_manifest(spark, target_path)
-    else:
-        base_versions, _, base_seq = _manifest_read(spark, target_path)
-        _refuse_backlog(base_versions[0] if base_versions else None)
-        read_path = (
-            f"{target_path}/_data/{base_versions[0]}"
-            if base_versions
-            else target_path
+    live, cols, base_seq = _live_manifest(spark, target_path)
+    # the backlog check reads the live state the merge ALREADY read — a
+    # standalone mor_deltas() probe here costs ~0.4 s of py4j
+    # small-file round trips per micro-batch merge (measured via the
+    # s22 A/B ratio)
+    if _state_deltas(live):
+        raise ValueError(
+            f"{target_path} carries outstanding merge-on-read deltas — "
+            "a copy-on-write merge would rewrite partitions WITHOUT "
+            "the backlog's rows and lose them. Either continue with "
+            "mor_upsert() or fold the backlog first "
+            "(compact_small_files / optimize_zorder)"
         )
-        is_manifest = read_path != target_path
-        if is_manifest and partition_by:
-            raise ValueError(
-                "flat manifest tables are unpartitioned (their commit unit "
-                "is the whole version); partitioned lakes on object stores "
-                "use write_partitioned_manifest_table(), local ones dynamic "
-                "overwrite"
-            )
-        if is_manifest:
-            existing = _read_immutable_dir(spark, read_path)
-        elif tombstone_col or allow_schema_evolution:
-            existing = spark.read.option("mergeSchema", "true").parquet(read_path)
-        else:
-            existing = spark.read.parquet(read_path)
+    _check_partition_by(partition_by, cols)
+    # both reads merge file schemas (tombstone bootstrap and additive
+    # evolution rewrite only touched partitions / new versions): a
+    # single-footer inference could pick an old file and drop the
+    # newer columns — for tombstones that resurrected deleted keys
+    existing = (
+        read_partitioned_manifest(spark, target_path)
+        if partition_by
+        else _read_immutable_dir(spark, f"{target_path}/_data/{live}")
+    )
     flag = {tombstone_col} if tombstone_col else set()
     added = (set(updates.columns) - flag) - set(existing.columns)
     if allow_schema_evolution and added:
@@ -1940,7 +1936,12 @@ def merge_upsert(
                 winners = winners.drop(tombstone_col)
         return keep.unionByName(winners)
 
-    if partition_by:
+    try:
+        if not partition_by:
+            _manifest_commit(
+                spark, target_path, _merge(existing), expected_seq=base_seq
+            )
+            return
         # Touched partitions = partitions the UPDATES land in, PLUS the
         # partitions currently holding any updated key — an update can
         # MOVE a key across partitions, and skipping the old partition
@@ -1958,119 +1959,29 @@ def merge_upsert(
         touched = touched_df.distinct().collect()
         if not touched:
             return
-        # every touched partition's subdir must be expressible BEFORE
-        # anything mutates the lake: an unescapable value should fail
-        # the merge up front, not after the dynamic overwrite committed
-        for r in touched:
-            _partition_subdir(partition_by, r)
-        pruned = _prune_to_partitions(existing, touched, partition_by)
-        merged = _merge(pruned)
-        if is_pmanifest:
-            # rewrite ONLY the touched partitions into a fresh immutable
-            # version dir, then publish a generation that points them at
-            # it (partitions the merge EMPTIED simply leave the mapping;
-            # untouched partitions keep their old version) — one pointer
-            # replace commits everything, object-store-safe
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vpath = f"{target_path}/_data/{version}"
-            merged.write.mode("error").partitionBy(*partition_by).parquet(vpath)
-            old_mapping = _pmanifest_mapping(spark, target_path, pinfo[0][0])
-            touched_sds = {_partition_subdir(partition_by, r) for r in touched}
-            new_mapping = {
-                sd: v for sd, v in old_mapping.items() if sd not in touched_sds
-            }
-            for sd in _list_partition_subdirs(spark, vpath, len(partition_by)):
-                new_mapping[sd] = version
-            try:
-                _pmanifest_commit(
-                    spark,
-                    target_path,
-                    partition_by,
-                    new_mapping,
-                    expected_seq=base_seq,
-                )
-            except ConcurrentCommitError:
-                # a racing commit moved the base: the version dir we
-                # wrote is an orphan (vacuum reclaims it); re-read and
-                # re-apply the merge against the fresh base
-                if occ_retries <= 0:
-                    raise
-                return merge_upsert(
-                    spark,
-                    target_path,
-                    updates,
-                    key_cols,
-                    partition_by=partition_by,
-                    keys_partition_stable=keys_partition_stable,
-                    version_cols=version_cols,
-                    tombstone_col=tombstone_col,
-                    retain_tombstones=retain_tombstones,
-                    allow_schema_evolution=allow_schema_evolution,
-                    occ_retries=occ_retries - 1,
-                )
-            return
-        # one execution for both consumers below: without the pin, the
-        # emptied-partition collect and the write would each run the
-        # whole touched-partition read + anti-join
-        merged.persist()
-        try:
-            # Dynamic overwrite replaces only partitions that RECEIVE
-            # rows: a touched partition whose every row moved away gets
-            # no output and would keep its stale files. Find those
-            # EMPTIED partitions before the write (merged reads the
-            # target, so afterwards is too late) and delete their
-            # directories post-commit via the Hadoop FileSystem (one
-            # code path for file:// and object stores). The deletion is
-            # idempotent — a crash between write and delete leaves
-            # stale rows that re-running the same merge removes.
-            merged_parts = {
-                tuple(r[c] for c in partition_by)
-                for r in merged.select(*partition_by).distinct().collect()
-            }
-            emptied = [
-                r for r in touched
-                if tuple(r[c] for c in partition_by) not in merged_parts
-            ]
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_by)
-                .parquet(target_path)
-            )
-        finally:
-            merged.unpersist()
-        for r in emptied:
-            _delete_partition_dir(spark, target_path, partition_by, r)
-        return
-
-    merged = _merge(existing)
-    if is_manifest:
-        # object-store-safe: new immutable version dir + commit-log
-        # claim at the seq the base was read at
-        try:
-            _manifest_commit(spark, target_path, merged, expected_seq=base_seq)
-        except ConcurrentCommitError:
-            if occ_retries <= 0:
-                raise
-            return merge_upsert(
-                spark,
-                target_path,
-                updates,
-                key_cols,
-                version_cols=version_cols,
-                tombstone_col=tombstone_col,
-                retain_tombstones=retain_tombstones,
-                allow_schema_evolution=allow_schema_evolution,
-                occ_retries=occ_retries - 1,
-            )
-        return
-    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-    try:
-        merged.write.mode("overwrite").parquet(staging)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    _swap_directories(target_path, staging)
+        merged = _merge(_prune_to_partitions(existing, touched, partition_by))
+        _pmanifest_rewrite(
+            spark, target_path, partition_by, live, merged, touched, base_seq
+        )
+    except ConcurrentCommitError:
+        # a racing commit moved the base: the version dir we wrote is
+        # an orphan (vacuum reclaims it); re-read and re-apply the
+        # merge against the fresh base
+        if occ_retries <= 0:
+            raise
+        merge_upsert(
+            spark,
+            target_path,
+            updates,
+            key_cols,
+            partition_by=partition_by,
+            keys_partition_stable=keys_partition_stable,
+            version_cols=version_cols,
+            tombstone_col=tombstone_col,
+            retain_tombstones=retain_tombstones,
+            allow_schema_evolution=allow_schema_evolution,
+            occ_retries=occ_retries - 1,
+        )
 
 
 def purge_tombstones(
@@ -2081,80 +1992,81 @@ def purge_tombstones(
     partition_by: Sequence[str] | None = None,
     occ_retries: int = 5,
 ) -> int:
-    """Drop retained soft tombstones from a CDC table — the periodic
-    compaction that bounds a ``merge_upsert(retain_tombstones=True)``
-    lake. Purge ONLY tombstones older than your out-of-orderness
-    horizon (pass ``horizon`` as a boolean Column over the row, e.g.
+    """Drop retained soft tombstones from a CDC manifest table — the
+    periodic compaction that bounds a
+    ``merge_upsert(retain_tombstones=True)`` lake. Purge ONLY
+    tombstones older than your out-of-orderness horizon (pass
+    ``horizon`` as a boolean Column over the row, e.g.
     ``col('ts') < lit(cutoff)``): purging a younger tombstone reopens
     the resurrection window the retained flag exists to close — a
     stale upsert replayed after the purge would reinsert the key. A
     tombstone whose horizon evaluates to NULL is KEPT (can't prove
     it's past the horizon ⇒ not purgeable) and not counted. Stored
-    NULL flags are live and always kept.
+    NULL flags are live and always kept. Returns the number of rows
+    purged.
 
-    Pass the SAME ``partition_by`` the merges use: the purge then
-    rewrites only the partitions that actually hold purgeable rows
-    (pruned dynamic overwrite, partitions emptied by the purge have
-    their directories removed) and the table keeps its layout — a
-    layout-blind flat rewrite would leave files where partition
-    discovery never finds them again. Unpartitioned tables use
-    copy-on-write staging + swap (commit caveats as
-    :func:`compact_small_files`). Returns the number of rows purged.
+    Commit protocol — the same commit log as :func:`merge_upsert`,
+    with the same OCC retry: a flat manifest commits its survivors as
+    one fresh version; a partitioned manifest (pass its
+    ``partition_by``) rewrites only the partitions that hold purgeable
+    rows, and a partition the purge empties leaves the generation
+    mapping. A plain parquet directory raises ``ValueError``.
 
     Scale shape (partitioned): one column-pruned stats aggregation
-    gives the driver purged/affected/emptied in a single bounded
-    collect, then ONE pruned read feeds the dynamic overwrite —
+    gives the driver the purged count and the affected partitions in
+    a single bounded collect, then ONE pruned read feeds the rewrite —
     affected-partition pruning switches from a literal predicate to a
     broadcast semi join past 64 partitions, exactly as
     :func:`merge_upsert` does."""
-    import shutil
-    import uuid
+    live, cols, base_seq = _live_manifest(spark, path)
+    if _state_deltas(live):
+        raise ValueError(
+            f"{path} carries outstanding merge-on-read deltas — purge "
+            "operates on stored rows; fold the backlog first "
+            "(compact_small_files / optimize_zorder), then purge"
+        )
+    _check_partition_by(partition_by, cols)
+    df = (
+        read_partitioned_manifest(spark, path)
+        if partition_by
+        else _read_immutable_dir(spark, f"{path}/_data/{live}")
+    )
+    if tombstone_col not in df.columns:
+        raise ValueError(f"tombstone_col not in table: {tombstone_col}")
+    doomed = F.coalesce(F.col(tombstone_col), F.lit(False))
+    if horizon is not None:
+        doomed = doomed & F.coalesce(horizon, F.lit(False))
 
-    def _refuse_backlog(live_state: str | None) -> None:
-        # derived from the pointer reads below — see merge_upsert's
-        # twin for why a standalone mor_deltas() probe is too hot here
-        if live_state and _state_deltas(live_state):
-            raise ValueError(
-                f"{path} carries outstanding merge-on-read deltas — purge "
-                "operates on stored rows; fold the backlog first "
-                "(compact_small_files / optimize_zorder), then purge"
-            )
-
-    pinfo = _pmanifest_read(spark, path)
-    is_pmanifest = pinfo is not None
-    if is_pmanifest:
-        _refuse_backlog(pinfo[0][0] if pinfo[0] else None)
+    try:
         if not partition_by:
-            raise ValueError(
-                f"partitioned manifest table: pass partition_by={pinfo[2]}"
-            )
-        if pinfo[2] and list(partition_by) != pinfo[2]:
-            raise ValueError(
-                f"partition_by {list(partition_by)} != table's partition "
-                f"columns {pinfo[2]}"
-            )
-        read_path = path
-        is_manifest = False
-        base_seq = pinfo[3]
-        df = read_partitioned_manifest(spark, path)
-    else:
-        base_versions, _, base_seq = _manifest_read(spark, path)
-        _refuse_backlog(base_versions[0] if base_versions else None)
-        read_path = (
-            f"{path}/_data/{base_versions[0]}" if base_versions else path
+            purged = df.filter(doomed).count()
+            if purged:
+                _manifest_commit(
+                    spark, path, df.filter(~doomed), expected_seq=base_seq
+                )
+            return purged
+        # ONE column-pruned stats scan (partition cols + the flag/
+        # horizon columns only) yields the purged count and the
+        # affected partitions as one bounded collect (≤ one row per
+        # affected partition)
+        affected = (
+            df.groupBy(*partition_by)
+            .agg(F.sum(F.when(doomed, 1).otherwise(0)).alias("_doomed"))
+            .filter(F.col("_doomed") > 0)
+            .collect()
         )
-        is_manifest = read_path != path
-        if is_manifest and partition_by:
-            raise ValueError("flat manifest tables are unpartitioned")
-        df = (
-            _read_immutable_dir(spark, read_path)
-            if is_manifest
-            else spark.read.option("mergeSchema", "true").parquet(read_path)
-        )
-
-    def _occ_retry() -> int:
+        purged = sum(r["_doomed"] for r in affected)
+        if purged:
+            survivors = _prune_to_partitions(df, affected, partition_by).filter(
+                ~doomed
+            )
+            _pmanifest_rewrite(
+                spark, path, partition_by, live, survivors, affected, base_seq
+            )
+        return purged
+    except ConcurrentCommitError:
         if occ_retries <= 0:
-            raise  # noqa: PLE0704 — re-raise the active ConcurrentCommitError
+            raise
         return purge_tombstones(
             spark,
             path,
@@ -2163,94 +2075,65 @@ def purge_tombstones(
             partition_by=partition_by,
             occ_retries=occ_retries - 1,
         )
-    if tombstone_col not in df.columns:
-        raise ValueError(f"tombstone_col not in table: {tombstone_col}")
-    doomed = F.coalesce(F.col(tombstone_col), F.lit(False))
-    if horizon is not None:
-        doomed = doomed & F.coalesce(horizon, F.lit(False))
 
-    if partition_by:
-        # ONE column-pruned stats scan (partition cols + the flag/
-        # horizon columns only) yields everything the driver needs —
-        # purged count, affected partitions, partitions the purge
-        # EMPTIES — as one bounded collect (≤ one row per affected
-        # partition). The old shape read the full table three times
-        # (doomed count, affected collect, survivor-partition collect)
-        # before the write even started.
-        stats = (
-            df.groupBy(*partition_by)
-            .agg(
-                F.sum(F.when(doomed, 1).otherwise(0)).alias("_doomed"),
-                F.sum(F.when(~doomed, 1).otherwise(0)).alias("_live"),
-            )
-            .filter(F.col("_doomed") > 0)
-            .collect()
-        )
-        purged = sum(r["_doomed"] for r in stats)
-        if purged == 0:
-            return 0
-        affected = stats
-        emptied = {
-            tuple(r[c] for c in partition_by)
-            for r in stats
-            if r["_live"] == 0
-        }
-        pruned = _prune_to_partitions(df, affected, partition_by)
-        survivors = pruned.filter(~doomed)
-        if is_pmanifest:
-            # same commit shape as the pmanifest merge: affected
-            # partitions' survivors land in a fresh version dir, the new
-            # generation repoints them (emptied ones drop out of the
-            # mapping), everything else keeps its version
+
+def _rewrite_live(
+    spark, path: str, layout, target_rows_per_file: int, occ_retries: int
+) -> int:
+    """The ONE whole-table maintenance rewrite, shared by
+    :func:`compact_small_files` and :func:`optimize_zorder`, which
+    differ only in ``layout(df, files, partition_cols) -> DataFrame``:
+    read the live table (any merge-on-read backlog resolved, so the
+    committed state is a plain state line again), lay it out over
+    ``files = ceil(rows / target_rows_per_file)`` tasks, and commit it
+    as ONE fresh version — flat: through the pointer; partitioned: a
+    generation mapping every partition to it. A commit that lost a
+    race re-runs against the fresh state, up to ``occ_retries`` times.
+    Returns the new version's data file count (through the Hadoop FS:
+    the table may live on an object store)."""
+    import math
+    import uuid
+
+    _, cols, seq = _live_manifest(spark, path)
+    if cols is None:
+        df = read_manifest_table(spark, path)
+    elif not cols:
+        raise ValueError(f"partitioned manifest {path} lists no #cols")
+    else:
+        df = read_partitioned_manifest(spark, path)
+    files = max(1, math.ceil(df.count() / target_rows_per_file))
+    laid = layout(df, files, cols or [])
+    try:
+        if cols is None:
+            _manifest_commit(spark, path, laid, expected_seq=seq)
+            vpath, subdirs = _resolve_table_path(spark, path), [""]
+        else:
+            # each partition value hash/range-pinned to its tasks → few
+            # files per partition dir
             version = f"v_{uuid.uuid4().hex[:12]}"
             vpath = f"{path}/_data/{version}"
-            survivors.write.mode("error").partitionBy(*partition_by).parquet(vpath)
-            old_mapping = _pmanifest_mapping(spark, path, pinfo[0][0])
-            affected_sds = {_partition_subdir(partition_by, r) for r in affected}
-            new_mapping = {
-                sd: v for sd, v in old_mapping.items() if sd not in affected_sds
-            }
-            for sd in _list_partition_subdirs(spark, vpath, len(partition_by)):
-                new_mapping[sd] = version
-            try:
-                _pmanifest_commit(
-                    spark, path, partition_by, new_mapping,
-                    expected_seq=base_seq,
-                )
-            except ConcurrentCommitError:
-                return _occ_retry()
-            return purged
-        (
-            survivors.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-        for r in affected:
-            if tuple(r[c] for c in partition_by) in emptied:
-                _delete_partition_dir(spark, path, partition_by, r)
-        return purged
-
-    purged = df.filter(doomed).count()
-    if purged == 0:
-        return 0
-
-    if is_manifest:
-        try:
-            _manifest_commit(
-                spark, path, df.filter(~doomed), expected_seq=base_seq
+            laid.write.mode("error").partitionBy(*cols).parquet(vpath)
+            subdirs = _list_partition_subdirs(spark, vpath, len(cols))
+            _pmanifest_commit(
+                spark, path, cols, {sd: version for sd in subdirs},
+                expected_seq=seq,
             )
-        except ConcurrentCommitError:
-            return _occ_retry()
-        return purged
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    try:
-        df.filter(~doomed).write.mode("overwrite").parquet(staging)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    _swap_directories(path, staging)
-    return purged
+    except ConcurrentCommitError:
+        if occ_retries <= 0:
+            raise
+        return _rewrite_live(
+            spark, path, layout, target_rows_per_file, occ_retries - 1
+        )
+    fs, _, jvm = _hadoop_fs(spark, vpath)
+    count = 0
+    for sd in subdirs:
+        for st in fs.listStatus(
+            jvm.org.apache.hadoop.fs.Path(f"{vpath}/{sd}" if sd else vpath)
+        ):
+            nm = st.getPath().getName()
+            if nm.startswith("part-") and nm.endswith(".parquet"):
+                count += 1
+    return count
 
 
 def compact_small_files(
@@ -2259,103 +2142,26 @@ def compact_small_files(
     target_rows_per_file: int = 1_000_000,
     occ_retries: int = 5,
 ) -> int:
-    """Compact a parquet directory's small-file dust into
+    """Compact a manifest table's small-file dust into
     ~``target_rows_per_file`` files (the maintenance job every
     streaming/append lake needs: availableNow micro-batches and
     per-trigger appends leave thousands of KB-sized files whose
-    open/footer cost eventually dominates scans). Returns the new file
-    count. Copy-on-write via staging + swap (see
-    :func:`_swap_directories` for the commit caveats); a failure during
-    the rewrite leaves the original directory untouched and removes the
-    staging dir."""
-    import math
-    import os
-    import shutil
-    import uuid
+    open/footer cost eventually dominates scans), folding any
+    merge-on-read backlog on the way. Returns the new file count.
 
-    pinfo = _pmanifest_read(spark, path)
-    if pinfo is not None:
-        # partitioned manifest: rewrite the live table into ONE fresh
-        # version (each partition value hash-pinned to a single task →
-        # one file per partition dir), publish a generation mapping
-        # every partition to it
-        cols = pinfo[2]
-        if not cols:
-            raise ValueError(f"partitioned manifest {path} lists no #cols")
-        df = read_partitioned_manifest(spark, path)
-        n = df.count()
-        files = max(1, math.ceil(n / target_rows_per_file))
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vpath = f"{path}/_data/{version}"
-        (
-            df.repartition(files, *cols)
-            .write.mode("error")
-            .partitionBy(*cols)
-            .parquet(vpath)
-        )
-        subdirs = _list_partition_subdirs(spark, vpath, len(cols))
-        try:
-            _pmanifest_commit(
-                spark, path, cols, {sd: version for sd in subdirs},
-                expected_seq=pinfo[3],
-            )
-        except ConcurrentCommitError:
-            if occ_retries <= 0:
-                raise
-            return compact_small_files(
-                spark, path, target_rows_per_file, occ_retries - 1
-            )
-        fs, _, jvm = _hadoop_fs(spark, vpath)
-        count = 0
-        for sd in subdirs:
-            p2 = jvm.org.apache.hadoop.fs.Path(f"{vpath}/{sd}")
-            for st in fs.listStatus(p2):
-                nm = st.getPath().getName()
-                if nm.startswith("part-") and nm.endswith(".parquet"):
-                    count += 1
-        return count
-
-    base_versions, _, base_seq = _manifest_read(spark, path)
-    if base_versions:
-        # resolves any merge-on-read backlog: the committed version is
-        # a plain state line again (the OPTIMIZE that restores scan
-        # speed and data skipping after a run of mor_upserts)
-        df = read_manifest_table(spark, path)
-        read_path = f"{path}/_data/{base_versions[0]}"
-    else:
-        read_path = path
-        df = spark.read.parquet(read_path)
-    n = df.count()
-    files = max(1, math.ceil(n / target_rows_per_file))
-    if read_path != path:
-        try:
-            _manifest_commit(
-                spark, path, df.repartition(files), expected_seq=base_seq
-            )
-        except ConcurrentCommitError:
-            if occ_retries <= 0:
-                raise
-            return compact_small_files(
-                spark, path, target_rows_per_file, occ_retries - 1
-            )
-        # count through the Hadoop FS — a manifest table may live on an
-        # object store where os.listdir has no meaning
-        fs, live_p, _ = _hadoop_fs(spark, _resolve_table_path(spark, path))
-        return sum(
-            1
-            for st in fs.listStatus(live_p)
-            if st.getPath().getName().startswith("part-")
-            and st.getPath().getName().endswith(".parquet")
-        )
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    try:
-        df.repartition(files).write.mode("overwrite").parquet(staging)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    _swap_directories(path, staging)
-    return sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet") and f.startswith("part-")
+    Commit protocol (shared with :func:`optimize_zorder` — see
+    :func:`_rewrite_live`): the rewrite lands in a fresh immutable
+    version (a partitioned table hash-pins each partition value to one
+    task, so one file per partition dir) committed through the commit
+    log; a failure mid-write never touches live data, and a lost
+    commit race re-runs against the new state. A plain parquet
+    directory raises ``ValueError``."""
+    return _rewrite_live(
+        spark,
+        path,
+        lambda df, files, cols: df.repartition(files, *cols),
+        target_rows_per_file,
+        occ_retries,
     )
 
 
@@ -2373,105 +2179,26 @@ def optimize_zorder(
     predicates on any subset of those columns. Returns the new data
     file count.
 
-    Commit safety matches :func:`compact_small_files` per table
-    flavor: a flat manifest table publishes ONE new ``_data/v_*``
+    Commit protocol as :func:`compact_small_files` (one shared
+    rewrite): a flat manifest table publishes ONE new ``_data/v_*``
     version through the pointer; a partitioned manifest table writes
-    one fresh version clustered (partition cols first, z-value
-    within) and publishes a generation mapping every partition to it;
-    a plain local directory uses staging + swap. The rewrite is the
+    one fresh version clustered (partition cols first, z-value within)
+    and publishes a generation mapping every partition to it; a plain
+    parquet directory raises ``ValueError``. The rewrite is the
     familiar maintenance shape — one stats row for the quantization
     bounds, one sampled range shuffle (skew-proof), spillable sorts —
     and a failure mid-write never touches live data."""
-    import math
-    import os
-    import shutil
-    import uuid
-
     from async_pipes_spark.sources.layout import zorder_value
 
-    def _count_files(dir_path: str, subdirs: Sequence[str] = ("",)) -> int:
-        fs, _, jvm = _hadoop_fs(spark, dir_path)
-        total = 0
-        for sd in subdirs:
-            p = jvm.org.apache.hadoop.fs.Path(
-                f"{dir_path}/{sd}" if sd else dir_path
-            )
-            for st in fs.listStatus(p):
-                nm = st.getPath().getName()
-                if nm.startswith("part-") and nm.endswith(".parquet"):
-                    total += 1
-        return total
-
-    pinfo = _pmanifest_read(spark, path)
-    if pinfo is not None:
-        cols = pinfo[2]
-        if not cols:
-            raise ValueError(f"partitioned manifest {path} lists no #cols")
-        df = read_partitioned_manifest(spark, path)
-        n = df.count()
-        files = max(1, math.ceil(n / target_rows_per_file))
-        z = zorder_value(df, zorder_by)
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vpath = f"{path}/_data/{version}"
-        (
-            df.withColumn("_z", z)
+    def layout(df: DataFrame, files: int, cols: list[str]) -> DataFrame:
+        return (
+            df.withColumn("_z", zorder_value(df, zorder_by))
             .repartitionByRange(files, *cols, "_z")
             .sortWithinPartitions(*cols, "_z")
             .drop("_z")
-            .write.mode("error")
-            .partitionBy(*cols)
-            .parquet(vpath)
         )
-        subdirs = _list_partition_subdirs(spark, vpath, len(cols))
-        try:
-            _pmanifest_commit(
-                spark, path, cols, {sd: version for sd in subdirs},
-                expected_seq=pinfo[3],
-            )
-        except ConcurrentCommitError:
-            if occ_retries <= 0:
-                raise
-            return optimize_zorder(
-                spark, path, zorder_by, target_rows_per_file, occ_retries - 1
-            )
-        return _count_files(vpath, subdirs)
 
-    base_versions, _, base_seq = _manifest_read(spark, path)
-    if base_versions:
-        # resolves any merge-on-read backlog (see compact_small_files)
-        df = read_manifest_table(spark, path)
-        read_path = f"{path}/_data/{base_versions[0]}"
-    else:
-        read_path = path
-        df = spark.read.parquet(read_path)
-    n = df.count()
-    files = max(1, math.ceil(n / target_rows_per_file))
-    clustered = (
-        df.withColumn("_z", zorder_value(df, zorder_by))
-        .repartitionByRange(files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    if read_path != path:  # flat manifest table
-        try:
-            _manifest_commit(spark, path, clustered, expected_seq=base_seq)
-        except ConcurrentCommitError:
-            if occ_retries <= 0:
-                raise
-            return optimize_zorder(
-                spark, path, zorder_by, target_rows_per_file, occ_retries - 1
-            )
-        return _count_files(_resolve_table_path(spark, path))
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    try:
-        clustered.write.mode("overwrite").parquet(staging)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    _swap_directories(path, staging)
-    return sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet") and f.startswith("part-")
-    )
+    return _rewrite_live(spark, path, layout, target_rows_per_file, occ_retries)
 
 
 def vacuum_manifest(

@@ -1124,12 +1124,11 @@ def test_zorder_value_edge_cases(spark):
 
 
 def test_optimize_zorder_all_table_flavors(spark, tmp_path):
-    """optimize_zorder is OPTIMIZE..ZORDER across all three commit
-    flavors: plain local dir (staging+swap), flat manifest (pointer
-    commit, old version still time-travelable), partitioned manifest
-    (one clustered version, generation advanced). Data is always
-    byte-identical; the flat flavors must show tighter per-file
-    bounding boxes than the incoming random layout."""
+    """optimize_zorder is OPTIMIZE..ZORDER across both manifest
+    layouts: flat (pointer commit, old version still time-travelable)
+    and partitioned (one clustered version, generation advanced). Data
+    is always byte-identical; the flat layout must show tighter
+    per-file bounding boxes than the incoming random layout."""
     from async_pipes_spark.functions.money import cents
     from async_pipes_spark.sources.layout import file_clustering_report
     from async_pipes_spark.sources.sinks import (
@@ -1163,19 +1162,12 @@ def test_optimize_zorder_all_table_flavors(spark, tmp_path):
             for b in boxes
         ) / len(boxes)
 
-    # 1. plain local dir
-    plain = str(tmp_path / "plain")
-    orders.repartition(12).write.parquet(plain)
-    before = mean_area(plain)
-    nfiles = optimize_zorder(spark, plain, zcols, target_rows_per_file=150)
-    assert nfiles >= 8
-    assert sorted(map(tuple, spark.read.parquet(plain).collect())) == want
-    assert mean_area(plain) < 0.5 * before
-
-    # 2. flat manifest table
+    # 1. flat manifest table
     man = str(tmp_path / "man")
     write_manifest_table(spark, orders.repartition(12), man)
-    optimize_zorder(spark, man, zcols, target_rows_per_file=150)
+    before = mean_area(f"{man}/_data/{manifest_versions(spark, man)[0]}")
+    nfiles = optimize_zorder(spark, man, zcols, target_rows_per_file=150)
+    assert nfiles >= 8
     assert sorted(map(tuple, read_manifest_table(spark, man).collect())) == want
     vs = manifest_versions(spark, man)
     assert len(vs) == 2  # optimized live + pre-optimize time travel
@@ -1183,8 +1175,9 @@ def test_optimize_zorder_all_table_flavors(spark, tmp_path):
         map(tuple, read_manifest_table(spark, man, version=vs[1]).collect())
     ) == want
     assert mean_area(f"{man}/_data/{vs[0]}") < 0.35
+    assert mean_area(f"{man}/_data/{vs[0]}") < 0.5 * before
 
-    # 3. partitioned manifest table
+    # 2. partitioned manifest table
     pman = str(tmp_path / "pman")
     write_partitioned_manifest_table(
         spark, orders.repartition(12), pman, ["o_orderstatus"]

@@ -158,20 +158,20 @@ def test_stream_producer_finite_closure_ends(spark, tmp_path):
 
 
 def test_merge_upsert_replaces_keeps_appends(spark, tmp_path):
-    """MERGE semantics on a parquet dir: same-key rows replaced,
-    unmatched target rows kept, new keys appended; atomic via staging
-    rename."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    """MERGE semantics on a flat manifest table: same-key rows
+    replaced, unmatched target rows kept, new keys appended; committed
+    as a fresh version through the pointer."""
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "tbl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k bigint, s string, v bigint"
-    ).coalesce(1).write.parquet(tgt)
+    ).coalesce(1))
     updates = spark.createDataFrame(
         [(2, "B", 200), (9, "z", 90)], "k bigint, s string, v bigint"
     )
     merge_upsert(spark, tgt, updates, ["k"])
-    got = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
+    got = sorted(tuple(r) for r in read_table(spark, tgt).collect())
     assert got == [(1, "a", 10), (2, "B", 200), (3, "c", 30), (9, "z", 90)]
 
     import pytest as _pytest
@@ -181,22 +181,43 @@ def test_merge_upsert_replaces_keeps_appends(spark, tmp_path):
 
 
 def test_compact_small_files(spark, tmp_path):
-    """Streaming dust (20 single-row appends) compacts to one file with
-    identical contents."""
-    from async_pipes_spark.sources.sinks import compact_small_files
+    """Dust (a live version of 20 single-row files) compacts to one
+    file with identical contents."""
+    from async_pipes_spark.sources.sinks import compact_small_files, read_table
 
     p = str(tmp_path / "dust")
-    for i in range(20):
-        spark.createDataFrame([(i,)], "n bigint").coalesce(1).write.mode(
-            "append"
-        ).parquet(p)
-    import os
-
-    before = sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
+    _seed(spark, p, spark.range(0, 20, 1, 20).select(F.col("id").alias("n")))
+    before = len(_data_files(p))
     assert before >= 20
     nfiles = compact_small_files(spark, p, target_rows_per_file=1000)
     assert nfiles == 1
-    assert sorted(r.n for r in spark.read.parquet(p).collect()) == list(range(20))
+    assert sorted(r.n for r in read_table(spark, p).collect()) == list(range(20))
+
+
+def _seed(spark, path, df, partition_by=None):
+    """Create a mutable (manifest) table: flat, or partitioned by
+    ``partition_by``."""
+    from async_pipes_spark.sources.sinks import (
+        write_manifest_table,
+        write_partitioned_manifest_table,
+    )
+
+    if partition_by:
+        write_partitioned_manifest_table(spark, df, path, partition_by)
+    else:
+        write_manifest_table(spark, df, path)
+
+
+def _live_mapping(spark, path):
+    """{partition subdir: version dir} of a partitioned manifest's live
+    generation."""
+    from async_pipes_spark.sources.sinks import (
+        _pmanifest_mapping,
+        partitioned_manifest_generations,
+    )
+
+    live = partitioned_manifest_generations(spark, path)[0]
+    return _pmanifest_mapping(spark, path, live.split("+")[0])
 
 
 def _data_files(root):
@@ -212,26 +233,28 @@ def _data_files(root):
 
 
 def test_merge_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
-    """The partitioned path is PRUNED dynamic partition overwrite: a
-    merge whose updates all land in partition p=2 must leave every
-    other partition's data files byte-untouched (same paths, same
-    mtimes) — the object-store-safe commit with no directory rename."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    """The partitioned path rewrites only TOUCHED partitions: a merge
+    whose updates all land in partition p=2 repoints p=2 at a fresh
+    version, and every other partition keeps its mapped version (its
+    files are not rewritten)."""
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "ptbl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(k, k % 4, k * 10) for k in range(40)], "k bigint, p bigint, v bigint"
-    ).repartition(4).write.partitionBy("p").parquet(tgt)
-    before = _data_files(tgt)
+    ).repartition(4), ["p"])
+    before = _live_mapping(spark, tgt)
 
     updates = spark.createDataFrame([(2, 2, 999), (102, 2, 111)], "k bigint, p bigint, v bigint")
     merge_upsert(spark, tgt, updates, ["k"], partition_by=["p"])
 
-    after = _data_files(tgt)
-    untouched_before = {f: m for f, m in before.items() if not f.startswith("p=2")}
-    untouched_after = {f: m for f, m in after.items() if not f.startswith("p=2")}
-    assert untouched_before == untouched_after  # identical files, not rewritten
-    got = {r.k: (r.p, r.v) for r in spark.read.parquet(tgt).collect()}
+    after = _live_mapping(spark, tgt)
+    untouched_before = {sd: v for sd, v in before.items() if sd != "p=2"}
+    untouched_after = {sd: v for sd, v in after.items() if sd != "p=2"}
+    assert len(untouched_before) == 3
+    assert untouched_before == untouched_after  # same versions, not rewritten
+    assert after["p=2"] != before["p=2"]
+    got = {r.k: (r.p, r.v) for r in read_table(spark, tgt).collect()}
     assert got[2] == (2, 999)  # replaced
     assert got[102] == (2, 111)  # appended
     assert got[6] == (2, 60)  # same-partition non-matching key survives
@@ -240,41 +263,47 @@ def test_merge_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_pa
 
 def test_merge_upsert_failed_write_never_corrupts_target(spark, tmp_path):
     """A write that fails MID-JOB (throwing UDF in the update plan)
-    must leave the target exactly as it was — both commit paths — and
-    leak no staging directories."""
-    import os
-
+    must leave the target exactly as it was — both manifest layouts:
+    no commit lands (the pointer seq is unchanged) and the rows read
+    back unchanged."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import (
+        _raw_pointer_seq,
+        merge_upsert,
+        read_table,
+    )
 
     @F.udf("bigint")
     def boom(x):
         raise RuntimeError("boom")
 
-    # unpartitioned (staging + swap) path
+    def snapshot(path):
+        rows = sorted(tuple(r) for r in read_table(spark, path).collect())
+        return _raw_pointer_seq(spark, path), rows
+
+    # flat manifest
     tgt = str(tmp_path / "tbl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 10), (2, 20)], "k bigint, v bigint"
-    ).coalesce(1).write.parquet(tgt)
-    before = _data_files(tgt)
+    ).coalesce(1))
+    before = snapshot(tgt)
     bad = spark.createDataFrame([(2,)], "k bigint").withColumn("v", boom("k"))
     with _pytest.raises(Exception, match="boom|Job aborted|PythonException"):
         merge_upsert(spark, tgt, bad, ["k"])
-    assert _data_files(tgt) == before
-    assert [d for d in os.listdir(tmp_path) if "__staging" in d or "__old" in d] == []
+    assert snapshot(tgt) == before
 
-    # partitioned (dynamic overwrite) path
+    # partitioned manifest
     ptgt = str(tmp_path / "ptbl")
-    spark.createDataFrame(
+    _seed(spark, ptgt, spark.createDataFrame(
         [(1, 0, 10), (2, 1, 20)], "k bigint, p bigint, v bigint"
-    ).repartition(1).write.partitionBy("p").parquet(ptgt)
-    pbefore = _data_files(ptgt)
+    ).repartition(1), ["p"])
+    pbefore = snapshot(ptgt)
     pbad = spark.createDataFrame([(2, 1)], "k bigint, p bigint").withColumn("v", boom("k"))
     with _pytest.raises(Exception, match="boom|Job aborted|PythonException"):
         merge_upsert(spark, ptgt, pbad, ["k"], partition_by=["p"])
-    assert _data_files(ptgt) == pbefore
+    assert snapshot(ptgt) == pbefore
 
 
 def test_two_producers_keep_their_own_closures(spark, tmp_path):
@@ -331,12 +360,12 @@ def test_merge_upsert_partitioned_key_move_and_stable_flag(spark, tmp_path):
     the key's OLD partition too (or the stale row survives as a
     duplicate); keys_partition_stable=True skips that old-partition
     scan and correctly applies when keys never move."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "mvtbl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 1, 10), (2, 2, 20), (3, 1, 30)], "k bigint, p bigint, v bigint"
-    ).write.partitionBy("p").parquet(tgt)
+    ), ["p"])
 
     # key 1 moves from p=1 to p=2
     merge_upsert(
@@ -346,7 +375,7 @@ def test_merge_upsert_partitioned_key_move_and_stable_flag(spark, tmp_path):
         ["k"],
         partition_by=["p"],
     )
-    got = sorted((r.k, r.p, r.v) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.p, r.v) for r in read_table(spark, tgt).collect())
     assert got == [(1, 2, 99), (2, 2, 20), (3, 1, 30)]  # no duplicate key 1
 
     # in-place update with the stable flag: old partition scan skipped
@@ -358,7 +387,7 @@ def test_merge_upsert_partitioned_key_move_and_stable_flag(spark, tmp_path):
         partition_by=["p"],
         keys_partition_stable=True,
     )
-    got = sorted((r.k, r.p, r.v) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.p, r.v) for r in read_table(spark, tgt).collect())
     assert got == [(1, 2, 99), (2, 2, 20), (3, 1, 77)]
 
 
@@ -366,13 +395,13 @@ def test_merge_upsert_partitioned_null_partition_survives(spark, tmp_path):
     """A NULL partition value must not black-hole surviving rows: the
     touched-partition predicate is null-safe, so merging into the NULL
     partition keeps its unmatched keys."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "nulltbl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, None, 10), (2, None, 20), (3, 5, 30)],
         "k bigint, p bigint, v bigint",
-    ).write.partitionBy("p").parquet(tgt)
+    ), ["p"])
 
     merge_upsert(
         spark,
@@ -382,7 +411,7 @@ def test_merge_upsert_partitioned_null_partition_survives(spark, tmp_path):
         partition_by=["p"],
     )
     got = sorted(
-        (r.k, r.p, r.v) for r in spark.read.parquet(tgt).collect()
+        (r.k, r.p, r.v) for r in read_table(spark, tgt).collect()
     )
     assert got == [(1, None, 99), (2, None, 20), (3, 5, 30)]
 
@@ -462,16 +491,16 @@ def test_stream_producer_exactly_once_across_restart(spark, tmp_path):
 
 
 def test_merge_upsert_emptied_partition_is_removed(spark, tmp_path):
-    """A key that is its partition's ONLY row moving elsewhere: dynamic
-    overwrite writes no rows into the old partition, so the emptied
-    directory must be explicitly removed — otherwise the stale row
+    """A key that is its partition's ONLY row moving elsewhere: the
+    rewrite writes no rows into the old partition, so the emptied
+    partition must leave the live mapping — otherwise the stale row
     survives as a duplicate key."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "emptytbl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 1, 10), (2, 2, 20)], "k bigint, p bigint, v bigint"
-    ).write.partitionBy("p").parquet(tgt)
+    ), ["p"])
 
     merge_upsert(
         spark,
@@ -480,9 +509,9 @@ def test_merge_upsert_emptied_partition_is_removed(spark, tmp_path):
         ["k"],
         partition_by=["p"],
     )
-    got = sorted((r.k, r.p, r.v) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.p, r.v) for r in read_table(spark, tgt).collect())
     assert got == [(1, 2, 99), (2, 2, 20)]  # no stale (1,1,10)
-    assert not (tmp_path / "emptytbl" / "p=1").exists()
+    assert "p=1" not in _live_mapping(spark, tgt)
 
 
 def test_producer_registry_reuses_name_per_closure(spark):
@@ -502,14 +531,15 @@ def test_producer_registry_reuses_name_per_closure(spark):
 
 def test_merge_upsert_multi_column_partitions(spark, tmp_path):
     """Two partition columns: key moves across the (p, q) lattice must
-    rewrite both ends, and an emptied leaf directory is removed."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    rewrite both ends, and an emptied leaf partition leaves the live
+    mapping."""
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "mc")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 1, 10, 100), (2, 1, 20, 200), (3, 2, 20, 300)],
         "k bigint, p bigint, q bigint, v bigint",
-    ).write.partitionBy("p", "q").parquet(tgt)
+    ), ["p", "q"])
 
     # key 3 moves (2,20) -> (1,10); (2,20) becomes empty
     merge_upsert(
@@ -519,9 +549,9 @@ def test_merge_upsert_multi_column_partitions(spark, tmp_path):
         ["k"],
         partition_by=["p", "q"],
     )
-    got = sorted((r.k, r.p, r.q, r.v) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.p, r.q, r.v) for r in read_table(spark, tgt).collect())
     assert got == [(1, 1, 10, 100), (2, 1, 20, 200), (3, 1, 10, 999)]
-    assert not (tmp_path / "mc" / "p=2" / "q=20").exists()
+    assert "p=2/q=20" not in _live_mapping(spark, tgt)
 
 
 def test_merge_upsert_versioned_last_writer_wins(spark, tmp_path):
@@ -529,13 +559,13 @@ def test_merge_upsert_versioned_last_writer_wins(spark, tmp_path):
     has the greater version tuple — target or update — and equal
     versions prefer the update; multiple update rows for one key
     self-resolve; NULL versions lose to any non-NULL."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "v")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 5, "old1"), (2, 5, "old2"), (3, 5, "old3"), (4, None, "old4")],
         "k bigint, ver bigint, s string",
-    ).coalesce(1).write.parquet(tgt)
+    ).coalesce(1))
     updates = spark.createDataFrame(
         [
             (1, 9, "new1"),      # newer -> update wins
@@ -548,7 +578,7 @@ def test_merge_upsert_versioned_last_writer_wins(spark, tmp_path):
         "k bigint, ver bigint, s string",
     )
     merge_upsert(spark, tgt, updates, ["k"], version_cols=["ver"])
-    got = sorted((r.k, r.s) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.s) for r in read_table(spark, tgt).collect())
     assert got == [
         (1, "new1"), (2, "old2"), (3, "tie3"), (4, "new4"), (5, "first5b"),
     ]
@@ -561,7 +591,7 @@ def test_merge_upsert_versioned_commutes_over_batch_order(spark, tmp_path):
     delivery and replays (s20's contract)."""
     import itertools
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     batches = [
         [(1, 10, "a1"), (2, 20, "a2")],
@@ -571,15 +601,15 @@ def test_merge_upsert_versioned_commutes_over_batch_order(spark, tmp_path):
     finals = []
     for i, order in enumerate(itertools.permutations(range(3))):
         tgt = str(tmp_path / f"o{i}")
-        spark.createDataFrame(
+        _seed(spark, tgt, spark.createDataFrame(
             [(1, 0, "seed1")], "k bigint, ver bigint, s string"
-        ).coalesce(1).write.parquet(tgt)
+        ).coalesce(1))
         for bi in order:
             updates = spark.createDataFrame(
                 batches[bi], "k bigint, ver bigint, s string"
             )
             merge_upsert(spark, tgt, updates, ["k"], version_cols=["ver"])
-        finals.append(sorted(tuple(r) for r in spark.read.parquet(tgt).collect()))
+        finals.append(sorted(tuple(r) for r in read_table(spark, tgt).collect()))
     assert all(f == finals[0] for f in finals[1:])
     assert finals[0] == [(1, 30, "b1"), (2, 20, "a2"), (3, 25, "c3"), (4, 1, "c4")]
 
@@ -587,15 +617,15 @@ def test_merge_upsert_versioned_commutes_over_batch_order(spark, tmp_path):
 def test_merge_upsert_versioned_partitioned_stale_move_ignored(spark, tmp_path):
     """Partitioned + versioned: a STALE update that would move a key to
     another partition must lose — the existing row stays in its
-    partition and the update's target partition gains nothing (and is
-    removed if it only existed for the loser)."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    partition and the update's target partition gains nothing (it
+    never enters the live mapping if it only existed for the loser)."""
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "pv")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, "x", 9, "cur"), (2, "y", 1, "other")],
         "k bigint, p string, ver bigint, s string",
-    ).coalesce(1).write.partitionBy("p").parquet(tgt)
+    ).coalesce(1), ["p"])
     # stale update tries to move k=1 from p=x to p=z
     merge_upsert(
         spark,
@@ -607,9 +637,9 @@ def test_merge_upsert_versioned_partitioned_stale_move_ignored(spark, tmp_path):
         partition_by=["p"],
         version_cols=["ver"],
     )
-    got = sorted((r.k, r.p, r.ver, r.s) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.p, r.ver, r.s) for r in read_table(spark, tgt).collect())
     assert got == [(1, "x", 9, "cur"), (2, "y", 1, "other")]
-    assert not (tmp_path / "pv" / "p=z").exists()
+    assert "p=z" not in _live_mapping(spark, tgt)
     # and a FRESH move does relocate the row
     merge_upsert(
         spark,
@@ -621,29 +651,29 @@ def test_merge_upsert_versioned_partitioned_stale_move_ignored(spark, tmp_path):
         partition_by=["p"],
         version_cols=["ver"],
     )
-    got = sorted((r.k, r.p, r.s) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, r.p, r.s) for r in read_table(spark, tgt).collect())
     assert got == [(1, "z", "moved"), (2, "y", "other")]
-    assert not (tmp_path / "pv" / "p=x").exists()
+    assert "p=x" not in _live_mapping(spark, tgt)
 
 
 def test_merge_upsert_versioned_equal_version_tiebreak_deterministic(spark, tmp_path):
     """Two update rows with EQUAL version tuples but different payloads
     must resolve identically on every run and partitioning (full-row
     hash tiebreak) — replay safety for at-least-once delivery."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     results = []
     for i, parts in enumerate([1, 7]):
         tgt = str(tmp_path / f"t{i}")
-        spark.createDataFrame(
+        _seed(spark, tgt, spark.createDataFrame(
             [(1, 0, "seed")], "k bigint, ver bigint, s string"
-        ).coalesce(1).write.parquet(tgt)
+        ).coalesce(1))
         updates = spark.createDataFrame(
             [(1, 5, "payloadA"), (1, 5, "payloadB")],
             "k bigint, ver bigint, s string",
         ).repartition(parts)
         merge_upsert(spark, tgt, updates, ["k"], version_cols=["ver"])
-        results.append(sorted(tuple(r) for r in spark.read.parquet(tgt).collect()))
+        results.append(sorted(tuple(r) for r in read_table(spark, tgt).collect()))
     assert results[0] == results[1]
     assert len(results[0]) == 1
 
@@ -655,12 +685,12 @@ def test_merge_upsert_tombstone_deletes_with_version_resolution(spark, tmp_path)
     count as live; tombstones without version_cols are rejected."""
     import pytest as _pytest
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "cdc")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 5, "a"), (2, 5, "b"), (3, 5, "c")], "k bigint, ver bigint, s string"
-    ).coalesce(1).write.parquet(tgt)
+    ).coalesce(1))
     updates = spark.createDataFrame(
         [
             (1, 9, "x", True),     # newer tombstone -> k=1 deleted
@@ -676,7 +706,7 @@ def test_merge_upsert_tombstone_deletes_with_version_resolution(spark, tmp_path)
         spark, tgt, updates, ["k"], version_cols=["ver"],
         tombstone_col="dead", retain_tombstones=False,
     )
-    out = spark.read.parquet(tgt)
+    out = read_table(spark, tgt)
     assert "dead" not in out.columns
     got = sorted((r.k, r.s) for r in out.collect())
     assert got == [(2, "b"), (3, "z"), (5, "v")]
@@ -694,7 +724,7 @@ def test_merge_upsert_tombstone_commutes_and_partitioned(spark, tmp_path):
     cross-partition move losing to the delete."""
     import itertools
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     batches = [
         [(1, "x", 10, "up1", False)],
@@ -704,10 +734,10 @@ def test_merge_upsert_tombstone_commutes_and_partitioned(spark, tmp_path):
     finals = []
     for i, order in enumerate(itertools.permutations(range(3))):
         tgt = str(tmp_path / f"o{i}")
-        spark.createDataFrame(
+        _seed(spark, tgt, spark.createDataFrame(
             [(1, "x", 0, "seed"), (2, "y", 0, "other")],
             "k bigint, p string, ver bigint, s string",
-        ).coalesce(1).write.partitionBy("p").parquet(tgt)
+        ).coalesce(1), ["p"])
         for bi in order:
             merge_upsert(
                 spark,
@@ -724,7 +754,7 @@ def test_merge_upsert_tombstone_commutes_and_partitioned(spark, tmp_path):
         # pre-tombstone file schema) — normalize like a reader would
         finals.append(
             sorted((r.k, r.p, r.ver, r.s, bool(r.dead))
-                   for r in spark.read.parquet(tgt).collect())
+                   for r in read_table(spark, tgt).collect())
         )
     assert all(f == finals[0] for f in finals[1:]), finals
     # k=1 survives only as its ver-20 soft tombstone; k=2 untouched
@@ -733,7 +763,7 @@ def test_merge_upsert_tombstone_commutes_and_partitioned(spark, tmp_path):
         (2, "y", 0, "other", False),
     ]
     # the live view readers consume
-    live = spark.read.parquet(str(tmp_path / "o0")).filter(
+    live = read_table(spark, str(tmp_path / "o0")).filter(
         "NOT coalesce(dead, false)"
     )
     assert [r.k for r in live.collect()] == [2]
@@ -742,13 +772,17 @@ def test_merge_upsert_tombstone_commutes_and_partitioned(spark, tmp_path):
 def test_purge_tombstones_drops_only_past_horizon(spark, tmp_path):
     """purge_tombstones: rows flagged dead AND past the horizon are
     removed; younger tombstones and live rows (incl. NULL flags)
-    survive; count returned; staging swap leaves a clean dir."""
+    survive; count returned; nothing to purge commits nothing."""
     from pyspark.sql import functions as F
 
-    from async_pipes_spark.sources.sinks import purge_tombstones
+    from async_pipes_spark.sources.sinks import (
+        _raw_pointer_seq,
+        purge_tombstones,
+        read_table,
+    )
 
     tgt = str(tmp_path / "pt")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [
             (1, 10, "old-dead", True),
             (2, 90, "young-dead", True),
@@ -756,16 +790,18 @@ def test_purge_tombstones_drops_only_past_horizon(spark, tmp_path):
             (4, 10, "null-flag", None),
         ],
         "k bigint, ver bigint, s string, dead boolean",
-    ).coalesce(1).write.parquet(tgt)
+    ).coalesce(1))
     purged = purge_tombstones(spark, tgt, "dead", horizon=F.col("ver") < 50)
     assert purged == 1
-    got = sorted(r.k for r in spark.read.parquet(tgt).collect())
+    got = sorted(r.k for r in read_table(spark, tgt).collect())
     assert got == [2, 3, 4]
     # no horizon: every tombstone goes
     assert purge_tombstones(spark, tgt, "dead") == 1
-    assert sorted(r.k for r in spark.read.parquet(tgt).collect()) == [3, 4]
+    assert sorted(r.k for r in read_table(spark, tgt).collect()) == [3, 4]
     # nothing to purge -> no rewrite, returns 0
+    seq = _raw_pointer_seq(spark, tgt)
     assert purge_tombstones(spark, tgt, "dead") == 0
+    assert _raw_pointer_seq(spark, tgt) == seq
 
     import pytest as _pytest
 
@@ -778,13 +814,13 @@ def test_merge_upsert_tombstone_survives_schema_inference_order(spark, tmp_path)
     partition sorts BEFORE the rewritten one, default parquet schema
     inference drops the flag column and the next merge resurrects the
     deleted key as live. The engine must read with mergeSchema."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "si")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, "a", 0, "seed-a"), (2, "z", 0, "seed-z")],
         "k bigint, p string, ver bigint, s string",
-    ).coalesce(1).write.partitionBy("p").parquet(tgt)
+    ).coalesce(1), ["p"])
     # delete k=2 (partition z — sorts AFTER untouched a)
     merge_upsert(
         spark,
@@ -811,7 +847,7 @@ def test_merge_upsert_tombstone_survives_schema_inference_order(spark, tmp_path)
         version_cols=["ver"],
         tombstone_col="dead",
     )
-    out = spark.read.option("mergeSchema", "true").parquet(tgt)
+    out = read_table(spark, tgt)
     live = sorted(
         r.k for r in out.filter("NOT coalesce(dead, false)").collect()
     )
@@ -829,7 +865,7 @@ def test_merge_upsert_tombstone_survives_schema_inference_order(spark, tmp_path)
         version_cols=["ver"],
         tombstone_col="dead",
     )
-    out = spark.read.option("mergeSchema", "true").parquet(tgt)
+    out = read_table(spark, tgt)
     assert sorted(
         r.k for r in out.filter("NOT coalesce(dead, false)").collect()
     ) == [1, 3]
@@ -840,17 +876,23 @@ def test_purge_tombstones_keeps_partition_layout(spark, tmp_path):
     table and the next partitioned merge silently dropped every
     unmerged row. Purge must rewrite only affected partitions and keep
     the layout."""
-    from async_pipes_spark.sources.sinks import merge_upsert, purge_tombstones
+    from async_pipes_spark.sources.sinks import (
+        merge_upsert,
+        purge_tombstones,
+        read_table,
+    )
 
     tgt = str(tmp_path / "pl")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, "x", 5, "dead1", True), (2, "y", 5, "live2", False)],
         "k bigint, p string, ver bigint, s string, dead boolean",
-    ).coalesce(1).write.partitionBy("p").parquet(tgt)
+    ).coalesce(1), ["p"])
+    before = _live_mapping(spark, tgt)
     assert purge_tombstones(spark, tgt, "dead", partition_by=["p"]) == 1
-    # partition x emptied -> directory removed; y untouched
-    assert not (tmp_path / "pl" / "p=x").exists()
-    assert (tmp_path / "pl" / "p=y").exists()
+    # partition x emptied -> leaves the mapping; y keeps its version
+    after = _live_mapping(spark, tgt)
+    assert "p=x" not in after
+    assert after["p=y"] == before["p=y"]
     # the next partitioned merge still sees k=2
     merge_upsert(
         spark,
@@ -864,7 +906,7 @@ def test_purge_tombstones_keeps_partition_layout(spark, tmp_path):
         version_cols=["ver"],
         tombstone_col="dead",
     )
-    got = sorted(r.k for r in spark.read.parquet(tgt).collect())
+    got = sorted(r.k for r in read_table(spark, tgt).collect())
     assert got == [2, 3]
 
 
@@ -874,15 +916,15 @@ def test_purge_tombstones_null_horizon_is_kept(spark, tmp_path):
     silently dropped outside the purged count."""
     from pyspark.sql import functions as F
 
-    from async_pipes_spark.sources.sinks import purge_tombstones
+    from async_pipes_spark.sources.sinks import purge_tombstones, read_table
 
     tgt = str(tmp_path / "nh")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, None, True), (2, 10, True), (3, 90, True), (4, 10, False)],
         "k bigint, ver bigint, dead boolean",
-    ).coalesce(1).write.parquet(tgt)
+    ).coalesce(1))
     assert purge_tombstones(spark, tgt, "dead", horizon=F.col("ver") < 50) == 1
-    assert sorted(r.k for r in spark.read.parquet(tgt).collect()) == [1, 3, 4]
+    assert sorted(r.k for r in read_table(spark, tgt).collect()) == [1, 3, 4]
 
 
 def test_merge_upsert_hard_mode_on_soft_table(spark, tmp_path):
@@ -890,13 +932,13 @@ def test_merge_upsert_hard_mode_on_soft_table(spark, tmp_path):
     already carries the flag column crashed on unionByName. It must
     keep the column, preserve stored flags outside the batch, and
     hard-delete the batch's winning tombstones."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "hs")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, 5, "a", False), (2, 5, "b", True), (3, 5, "c", False)],
         "k bigint, ver bigint, s string, dead boolean",
-    ).coalesce(1).write.parquet(tgt)
+    ).coalesce(1))
     merge_upsert(
         spark,
         tgt,
@@ -909,7 +951,7 @@ def test_merge_upsert_hard_mode_on_soft_table(spark, tmp_path):
         tombstone_col="dead",
         retain_tombstones=False,
     )
-    out = spark.read.parquet(tgt)
+    out = read_table(spark, tgt)
     rows = sorted((r.k, bool(r.dead)) for r in out.collect())
     # k=3 hard-deleted; k=2's STORED soft tombstone untouched
     assert rows == [(1, False), (2, True), (4, False)]
@@ -923,12 +965,12 @@ def test_merge_upsert_additive_schema_evolution(spark, tmp_path):
     the new column is rejected."""
     import pytest as _pytest
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "ev")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, "a", "x"), (2, "b", "y")], "k bigint, s string, p string"
-    ).coalesce(1).write.partitionBy("p").parquet(tgt)
+    ).coalesce(1), ["p"])
     updates = spark.createDataFrame(
         [(2, "B", "y", 7), (3, "c", "x", 9)],
         "k bigint, s string, p string, extra bigint",
@@ -938,7 +980,7 @@ def test_merge_upsert_additive_schema_evolution(spark, tmp_path):
     merge_upsert(
         spark, tgt, updates, ["k"], partition_by=["p"], allow_schema_evolution=True
     )
-    out = spark.read.option("mergeSchema", "true").parquet(tgt)
+    out = read_table(spark, tgt)
     got = sorted((r.k, r.s, r.extra) for r in out.collect())
     assert got == [(1, "a", None), (2, "B", 7), (3, "c", 9)]
     # a later batch must see the evolved schema (mergeSchema read) and
@@ -962,7 +1004,7 @@ def test_merge_upsert_additive_schema_evolution(spark, tmp_path):
         partition_by=["p"],
         allow_schema_evolution=True,
     )
-    out = spark.read.option("mergeSchema", "true").parquet(tgt)
+    out = read_table(spark, tgt)
     assert sorted(r.k for r in out.collect()) == [1, 2, 3, 4]
 
 
@@ -977,7 +1019,7 @@ def test_cdc_merge_sink_recovers_across_restart(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     lake = str(tmp_path / "lake")
     incoming = str(tmp_path / "incoming")
@@ -985,7 +1027,7 @@ def test_cdc_merge_sink_recovers_across_restart(spark, tmp_path):
 
     rows = [(k, v, f"s{k}v{v}") for k in range(20) for v in (1, 2, 3)]
     src = spark.createDataFrame(rows, "k bigint, ver bigint, s string")
-    src.filter("ver = 1").coalesce(1).write.parquet(lake)
+    _seed(spark, lake, src.filter("ver = 1").coalesce(1))
     # 6 single-row-group files so the throttled stream has real batches
     src.filter("ver >= 2").repartition(6, "k").write.parquet(incoming)
 
@@ -1015,7 +1057,7 @@ def test_cdc_merge_sink_recovers_across_restart(spark, tmp_path):
         time.sleep(0.2)
     q.stop()
     q.awaitTermination()
-    mid = spark.read.parquet(lake).count()
+    mid = read_table(spark, lake).count()
     assert mid <= 20 * 1  # never more than one row per key
 
     q2 = (
@@ -1032,7 +1074,7 @@ def test_cdc_merge_sink_recovers_across_restart(spark, tmp_path):
         .start()
     )
     q2.awaitTermination()
-    final = spark.read.parquet(lake)
+    final = read_table(spark, lake)
     got = sorted((r.k, r.ver, r.s) for r in final.collect())
     assert got == [(k, 3, f"s{k}v3") for k in range(20)]
 
@@ -1067,7 +1109,7 @@ def test_cdc_merge_randomized_against_python_model(spark, tmp_path):
     deleted keys = tombstones in the live view). Seeded, 3 trials."""
     import random
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     for seed in (7, 23, 99):
         rng = random.Random(seed)
@@ -1091,9 +1133,9 @@ def test_cdc_merge_randomized_against_python_model(spark, tmp_path):
         n_batches = rng.randrange(2, 6)
         batches = [changes[i::n_batches] for i in range(n_batches)]
         tgt = str(tmp_path / f"r{seed}")
-        spark.createDataFrame(
+        _seed(spark, tgt, spark.createDataFrame(
             [], "k bigint, ver bigint, s string, dead boolean"
-        ).write.parquet(tgt)
+        ))
         for b in batches:
             merge_upsert(
                 spark,
@@ -1105,8 +1147,7 @@ def test_cdc_merge_randomized_against_python_model(spark, tmp_path):
             )
         got = sorted(
             (r.k, r.ver, r.s)
-            for r in spark.read.option("mergeSchema", "true")
-            .parquet(tgt)
+            for r in read_table(spark, tgt)
             .filter("NOT coalesce(dead, false)")
             .collect()
         )
@@ -1114,15 +1155,17 @@ def test_cdc_merge_randomized_against_python_model(spark, tmp_path):
 
 
 def test_merge_upsert_boolean_partition_emptied_dir_removed(spark, tmp_path):
-    """Boolean partition values write as p=true/p=false; the emptied-
-    partition cleanup must hit those exact paths (str(True) is 'True'
-    — a silent no-op delete would leave the stale duplicate)."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    """Boolean partition values write as p=true/p=false; an emptied
+    partition must leave the live mapping under that exact name
+    (str(True) is 'True' — a mismatched name would keep the stale
+    mapping and its duplicate row)."""
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "bp")
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         [(1, True, "a"), (2, False, "b")], "k bigint, p boolean, s string"
-    ).coalesce(1).write.partitionBy("p").parquet(tgt)
+    ).coalesce(1), ["p"])
+    assert "p=true" in _live_mapping(spark, tgt)
     # move k=1 from p=true to p=false -> p=true empties
     merge_upsert(
         spark,
@@ -1133,28 +1176,28 @@ def test_merge_upsert_boolean_partition_emptied_dir_removed(spark, tmp_path):
     )
     # partition columns read back as strings (Spark's partition-type
     # inference has no boolean); the values must be lowercase
-    got = sorted((r.k, str(r.p).lower(), r.s) for r in spark.read.parquet(tgt).collect())
+    got = sorted((r.k, str(r.p).lower(), r.s) for r in read_table(spark, tgt).collect())
     assert got == [(1, "false", "a2"), (2, "false", "b")]
-    assert not (tmp_path / "bp" / "p=true").exists()
+    assert "p=true" not in _live_mapping(spark, tgt)
 
 
 def test_merge_upsert_many_partitions_uses_join_pruning(spark, tmp_path):
     """Past the OR-chain threshold (>64 touched partitions) the merge
     switches to broadcast semi-join pruning — same result, O(1) plan
     size in partition count."""
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     tgt = str(tmp_path / "mp")
     rows = [(i, f"p{i:03d}", "old") for i in range(100)]
-    spark.createDataFrame(rows, "k bigint, p string, s string").repartition(
-        4
-    ).write.partitionBy("p").parquet(tgt)
+    _seed(spark, tgt, spark.createDataFrame(
+        rows, "k bigint, p string, s string"
+    ).repartition(4), ["p"])
     updates = spark.createDataFrame(
         [(i, f"p{i:03d}", "new") for i in range(80)], "k bigint, p string, s string"
     )
     merge_upsert(spark, tgt, updates, ["k"], partition_by=["p"],
                  keys_partition_stable=True)
-    out = {r.k: r.s for r in spark.read.parquet(tgt).collect()}
+    out = {r.k: r.s for r in read_table(spark, tgt).collect()}
     assert len(out) == 100
     assert all(out[k] == "new" for k in range(80))
     assert all(out[k] == "old" for k in range(80, 100))
@@ -1164,7 +1207,7 @@ def test_purge_tombstones_many_partitions_uses_join_pruning(spark, tmp_path):
     """Past the OR-chain threshold (>64 affected partitions) the purge
     switches to broadcast semi-join pruning — same result, O(1) plan
     size in partition count — mirroring merge_upsert's switch."""
-    from async_pipes_spark.sources.sinks import purge_tombstones
+    from async_pipes_spark.sources.sinks import purge_tombstones, read_table
 
     tgt = str(tmp_path / "pp")
     # 100 partitions; the first 80 hold a tombstone each, 40 of those
@@ -1175,16 +1218,17 @@ def test_purge_tombstones_many_partitions_uses_join_pruning(spark, tmp_path):
             rows.append((1000 + i, f"p{i:03d}", 1, True))
         if i >= 40:
             rows.append((i, f"p{i:03d}", 1, False))
-    spark.createDataFrame(
+    _seed(spark, tgt, spark.createDataFrame(
         rows, "k bigint, p string, ver bigint, dead boolean"
-    ).repartition(4).write.partitionBy("p").parquet(tgt)
+    ).repartition(4), ["p"])
     assert purge_tombstones(spark, tgt, "dead", partition_by=["p"]) == 80
-    out = spark.read.option("mergeSchema", "true").parquet(tgt)
+    out = read_table(spark, tgt)
     assert out.filter("coalesce(dead, false)").count() == 0
     assert sorted(r.k for r in out.collect()) == list(range(40, 100))
-    # partitions emptied by the purge lose their directories
-    assert not (tmp_path / "pp" / "p=p000").exists()
-    assert (tmp_path / "pp" / "p=p040").exists()
+    # partitions emptied by the purge leave the live mapping
+    mapping = _live_mapping(spark, tgt)
+    assert "p=p000" not in mapping
+    assert "p=p040" in mapping
 
 
 def test_manifest_table_merge_commit_and_gc(spark, tmp_path):
@@ -1257,21 +1301,53 @@ def test_manifest_table_crash_during_write_leaves_table_intact(spark, tmp_path):
     assert [tuple(r) for r in read_manifest_table(spark, tgt).collect()] == [(1, "a")]
 
 
-def test_swap_rejects_object_store_uri(tmp_path):
-    """The local-FS directory swap must refuse non-file URIs with
-    guidance instead of failing obscurely (or copying) on an object
-    store."""
+def test_mutation_verbs_refuse_plain_directory(spark, tmp_path):
+    """Manifest tables are the only mutable format: every read-modify-
+    write verb refuses a plain parquet directory — flat or
+    partitionBy-laid-out — with guidance to write_manifest_table, and
+    leaves its files and rows exactly as they were."""
     import pytest as _pytest
 
-    from async_pipes_spark.sources.sinks import _swap_directories
+    from async_pipes_spark.sources.sinks import (
+        compact_small_files,
+        merge_upsert,
+        optimize_zorder,
+        purge_tombstones,
+        read_table,
+    )
 
-    with _pytest.raises(ValueError, match="manifest"):
-        _swap_directories("s3://bucket/table", "s3://bucket/table__staging")
+    df = spark.createDataFrame(
+        [(1, "x", 5, True), (2, "y", 5, False)],
+        "k bigint, p string, ver bigint, dead boolean",
+    )
+    upd = spark.createDataFrame(
+        [(1, "y", 9, False)], "k bigint, p string, ver bigint, dead boolean"
+    )
+    for name, partition_by in (("flat", None), ("part", ["p"])):
+        tgt = str(tmp_path / name)
+        writer = df.coalesce(1).write
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tgt)
+        files = _data_files(tgt)
+        rows = sorted(map(tuple, read_table(spark, tgt).collect()))
+        verbs = [
+            lambda: merge_upsert(spark, tgt, upd, ["k"], partition_by=partition_by,
+                                 version_cols=["ver"], tombstone_col="dead"),
+            lambda: purge_tombstones(spark, tgt, "dead", partition_by=partition_by),
+            lambda: compact_small_files(spark, tgt),
+            lambda: optimize_zorder(spark, tgt, ["k"]),
+        ]
+        for verb in verbs:
+            with _pytest.raises(ValueError, match="write_manifest_table"):
+                verb()
+            assert _data_files(tgt) == files, name
+        assert sorted(map(tuple, read_table(spark, tgt).collect())) == rows
 
 
 def test_manifest_purge_and_compact(spark, tmp_path):
-    """purge_tombstones and compact_small_files detect the pointer and
-    commit new versions instead of swapping directories."""
+    """purge_tombstones and compact_small_files on a flat manifest
+    commit new versions through the pointer."""
     from async_pipes_spark.sources.sinks import (
         compact_small_files,
         purge_tombstones,
@@ -1304,7 +1380,7 @@ def test_cdc_upsert_delete_evolve_randomized_model(spark, tmp_path):
     design; the replayer owns the upcast)."""
     import random
 
-    from async_pipes_spark.sources.sinks import merge_upsert
+    from async_pipes_spark.sources.sinks import merge_upsert, read_table
 
     for seed in (5, 41):
         rng = random.Random(seed)
@@ -1330,9 +1406,9 @@ def test_cdc_upsert_delete_evolve_randomized_model(spark, tmp_path):
         nb = rng.randrange(3, 6)
         batches = [changes[i::nb] for i in range(nb)]
         tgt = str(tmp_path / f"ev{seed}")
-        spark.createDataFrame(
+        _seed(spark, tgt, spark.createDataFrame(
             [], "k bigint, ver bigint, s string, dead boolean"
-        ).write.parquet(tgt)
+        ))
         evolved = False
         for b in batches:
             carries = any(he for *_x, he in b)
@@ -1352,7 +1428,7 @@ def test_cdc_upsert_delete_evolve_randomized_model(spark, tmp_path):
                 version_cols=["ver"], tombstone_col="dead",
                 allow_schema_evolution=True,
             )
-        out = spark.read.option("mergeSchema", "true").parquet(tgt)
+        out = read_table(spark, tgt)
         if "extra" not in out.columns:
             out = out.withColumn("extra", F.lit(None).cast("string"))
         got = sorted(

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 
@@ -42,7 +41,6 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, args.root)
-    os.environ.setdefault("SPARK_GRAFT_BLOCK_CACHE", "1")
 
     from async_pipes_spark.session import get_spark
     from async_pipes_spark.plans.declared import DECLARED_QUERIES

@@ -24,6 +24,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tests"))
+# Python workers (UDFs) import the package too: they inherit the
+# environment, not the driver's sys.path, so run from any directory
+# they need the checkout on PYTHONPATH before Spark starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(REPO), os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb  # noqa: E402
 
