@@ -78,7 +78,13 @@ import json
 from functools import reduce
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    SparkSession,
+    functions as F,
+)
 
 from async_pipes_spark.session import pin as _pin
 from async_pipes_spark.sources.cdc import mor_changes
@@ -844,20 +850,23 @@ def refresh_agg_view(
 
     ran_recompute = False
     if has_recompute:
-        # O(changed groups) decision frame — one cheap materialization
-        # tells us whether ANY group actually lost an extreme
-        merged = _pin(merged)
-        needy = merged.where(
-            reduce(
-                Column.__or__,
-                [
-                    F.col(f"_ivm_f_{name}")
-                    for name, (fn, _c) in aggs.items()
-                    if fn in _RECOMPUTED
-                ],
-            )
+        # O(changed groups) decision frame — one cheap materialization;
+        # the pin itself counts the groups that lost an extreme
+        # (observed, no job of its own)
+        is_needy = reduce(
+            Column.__or__,
+            [
+                F.col(f"_ivm_f_{name}")
+                for name, (fn, _c) in aggs.items()
+                if fn in _RECOMPUTED
+            ],
         )
-        ran_recompute = needy.limit(1).count() > 0
+        seen = Observation()
+        merged = _pin(
+            merged.observe(seen, F.count_if(is_needy).alias("needy"))
+        )
+        needy = merged.where(is_needy)
+        ran_recompute = seen.get["needy"] > 0
     if ran_recompute:
         # recompute ONLY the needy groups, against the snapshot the
         # cursor denotes (base ∪ deltas[..until]) — the racing live

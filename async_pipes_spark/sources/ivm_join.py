@@ -63,7 +63,13 @@ import json
 from functools import reduce
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    SparkSession,
+    functions as F,
+)
 
 from async_pipes_spark.session import pin as _pin
 from async_pipes_spark.sources.cdc import mor_changes
@@ -669,23 +675,26 @@ def refresh_join_view(
 
     ran_recompute = False
     if has_recompute:
-        # O(changed groups) decision frame — one cheap materialization
-        # tells us whether ANY group actually lost an extreme
-        merged = _pin(merged)
+        # O(changed groups) decision frame — one cheap materialization;
+        # the pin itself counts the groups that lost an extreme
+        # (observed, no job of its own)
+        is_needy = reduce(
+            Column.__or__,
+            [
+                F.col(f"_ivm_f_{name}")
+                for name, (fn, _c) in aggs.items()
+                if fn in _RECOMPUTED
+            ],
+        )
+        seen = Observation()
+        merged = _pin(
+            merged.observe(seen, F.count_if(is_needy).alias("needy"))
+        )
         # needy is a filter over the PINNED merged frame — every later
         # reference re-reads checkpointed blocks, so its own pin was a
         # pure extra job (the single-table lane in ivm.py never had one)
-        needy = merged.where(
-            reduce(
-                Column.__or__,
-                [
-                    F.col(f"_ivm_f_{name}")
-                    for name, (fn, _c) in aggs.items()
-                    if fn in _RECOMPUTED
-                ],
-            )
-        ).select(*group_cols, IVM_KEY)
-        ran_recompute = needy.limit(1).count() > 0
+        needy = merged.where(is_needy).select(*group_cols, IVM_KEY)
+        ran_recompute = seen.get["needy"] > 0
     if ran_recompute:
         # the key-probe gates inside the needy lane use each SLICE's
         # own backing bytes, not the feed-window flag — a tiny feed

@@ -452,6 +452,7 @@ def _manifest_commit(
         )
     version = f"v_{uuid.uuid4().hex[:12]}"
     df.write.mode("error").parquet(f"{path}/_data/{version}")
+    _record_dir_schema(f"{path}/_data/{version}", df)
     fs, _, jvm = _hadoop_fs(spark, f"{path}/{_MANIFEST}")
 
     def make_retained(prev_versions: list[str], prev_keep: int):
@@ -654,11 +655,40 @@ def _write_mor_spec(
 #: mergeSchema-merged schema IS any file's schema, and re-inferring it
 #: on every read is pure waste: measured ~105 ms per inferred read and
 #: ~250 ms per mergeSchema read vs ~20 ms schema-given on this host
-#: (guide §1.2 per-task work; §6 driver-side planning). Cross-version
-#: schema EVOLUTION is reconciled by the resolver's
-#: unionByName(allowMissingColumns), never by the per-dir read, so a
-#: cached per-dir schema loses nothing.
+#: (guide §1.2 per-task work; §6 driver-side planning). The writers of
+#: flat ``_data`` dirs (:func:`_manifest_commit`, :func:`mor_upsert`)
+#: record the schema they wrote (:func:`_record_dir_schema`), so a dir
+#: this process wrote is never inferred; a dir another process wrote
+#: is inferred once, on its first read. Cross-version schema EVOLUTION
+#: is reconciled by the resolver's unionByName(allowMissingColumns),
+#: never by the per-dir read, so a cached per-dir schema loses nothing.
 _DIR_SCHEMA_CACHE: dict[str, object] = {}
+
+
+def _as_nullable(dt):
+    """``dt`` with every struct field, array element and map value
+    nullable (field metadata kept) — the schema a parquet read returns
+    for data written as ``dt``."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+def _record_dir_schema(dir_path: str, df: DataFrame) -> None:
+    """Memoize the schema of the immutable dir ``df`` was just written
+    to — what a mergeSchema read of it would infer, with no Spark job."""
+    _DIR_SCHEMA_CACHE[dir_path] = _as_nullable(df.schema)
 
 
 def _read_immutable_dir(spark, *paths: str, schema_dir: str | None = None):
@@ -667,11 +697,7 @@ def _read_immutable_dir(spark, *paths: str, schema_dir: str | None = None):
     schema) with the dir's schema memoized — equivalent to the
     mergeSchema read for single-writer dirs (see _DIR_SCHEMA_CACHE),
     minus the per-read footer sweep and inference job."""
-    key = schema_dir or paths[0]
-    sch = _DIR_SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.option("mergeSchema", "true").parquet(key).schema
-        _DIR_SCHEMA_CACHE[key] = sch
+    sch = _dir_schema(spark, schema_dir or paths[0])
     return spark.read.schema(sch).parquet(*paths)
 
 
@@ -1129,6 +1155,7 @@ def mor_upsert(
             tombstone_col, F.coalesce(F.col(tombstone_col), F.lit(False))
         )
     out.write.mode("error").parquet(f"{path}/_data/{delta}")
+    _record_dir_schema(f"{path}/_data/{delta}", out)
     _write_mor_spec(
         spark, path, delta, key_cols, version_cols, tombstone_col,
         era_cols=out.columns,

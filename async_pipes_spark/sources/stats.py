@@ -894,11 +894,22 @@ def _mor_contested_plan(
     the sidecars' guarantees: a dropped file provably contains none of
     the delta keys, so no contested base row is lost. Probes the
     key-column BLOOM sidecar (any-of) and, for numeric keys, the
-    footer-stats sidecar (in-list), intersecting survivors."""
+    footer-stats sidecar (in-list), intersecting survivors. A table
+    with neither sidecar for its live base version returns None before
+    the delta keys are collected."""
     from async_pipes_spark.sources.sinks import _read_mor_spec
 
     keys, vers, _, _ = _read_mor_spec(spark, path, deltas[0])
     if not vers or len(keys) != 1:
+        return None
+    version = manifest_version(spark, path)
+    if not any(
+        fs.exists(p)
+        for fs, p, _ in (
+            _hadoop_fs(spark, _bloom_dir(path, version)),
+            _hadoop_fs(spark, _stats_dir(path, version)),
+        )
+    ):
         return None
     key = keys[0]
     dvals_df = (

@@ -317,6 +317,79 @@ def test_mor_changes_pin_job_count(spark, tmp_path):
     assert jobs == 4, jobs
 
 
+def test_mor_changes_build_launches_no_job(spark, tmp_path):
+    """Building the feed of a sidecar-less table right after the write
+    launches no Spark job: the writers recorded the base and delta
+    dirs' schemas, and the contested-scan planner sees that no sidecar
+    exists before it would collect the delta keys (3 jobs when both
+    schemas were inferred and the keys collected)."""
+    path = str(tmp_path / "t")
+    base = [(k, 0, f"i{k}", False) for k in range(20)]
+    write_manifest_table(spark, spark.createDataFrame(base, SCHEMA), path)
+    mor_upsert(
+        spark, path,
+        spark.createDataFrame(
+            [(3, 1, "u3", False), (4, 1, None, True), (25, 1, "n25", False)],
+            SCHEMA,
+        ),
+        key_cols=["k"], version_cols=["ver"], tombstone_col="dead",
+    )
+    feed = []
+    assert jobs_launched(spark, lambda: feed.append(mor_changes(spark, path))) == 0
+    assert _feed_counter(feed[0]) == Counter({
+        (3, 0, "i3", False, "update_preimage"): 1,
+        (3, 1, "u3", False, "update_postimage"): 1,
+        (4, 0, "i4", False, "delete"): 1,
+        (25, 1, "n25", False, "insert"): 1,
+    })
+
+
+def test_mor_changes_sidecar_lane_parity(spark, tmp_path):
+    """The same backlog over the same base gives the same feed whether
+    the base carries a key bloom sidecar (the contested scan opens only
+    the files that may hold a delta key) or none (the full base) — for
+    the whole backlog and for a cursored read of its tail."""
+    from async_pipes_spark.sources.stats import write_file_bloom
+
+    rng = random.Random(11)
+    base = spark.range(0, 400).select(
+        F.col("id").alias("k"),
+        F.lit(0).cast("bigint").alias("ver"),
+        F.concat(F.lit("s"), F.col("id")).alias("s"),
+        F.lit(False).alias("dead"),
+    ).repartition(8, "k")
+    batches = [
+        [(rng.choice((3, 7, 11, 401, 402)), v, f"b{v}_{i}",
+          rng.random() < 0.25)
+         for i in range(6)]
+        for v in (1, 2, 3)
+    ]
+    feeds = []
+    for name, bloom in (("plain", False), ("bloom", True)):
+        path = str(tmp_path / name)
+        write_manifest_table(spark, base, path)
+        if bloom:
+            write_file_bloom(spark, path, "k")
+        for b in batches:
+            mor_upsert(
+                spark, path, spark.createDataFrame(b, SCHEMA),
+                key_cols=["k"], version_cols=["ver"], tombstone_col="dead",
+            )
+        first = mor_deltas(spark, path)[0]
+        full = mor_changes(spark, path)
+        base_opened = [f for f in full.inputFiles() if "/_data/v_" in f]
+        feeds.append((
+            _feed_counter(full),
+            _feed_counter(mor_changes(spark, path, since=first)),
+            len(base_opened),
+        ))
+    (plain_full, plain_inc, plain_opened), (bloom_full, bloom_inc, bloom_opened) = feeds
+    assert plain_full and plain_inc
+    assert bloom_full == plain_full
+    assert bloom_inc == plain_inc
+    assert bloom_opened < plain_opened, (bloom_opened, plain_opened)
+
+
 def _plan(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

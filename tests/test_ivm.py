@@ -28,6 +28,8 @@ from async_pipes_spark.sources.sinks import (
     write_manifest_table,
 )
 
+from tests.conftest import jobs_launched
+
 SCHEMA = "k int, g int, x double, ver int, dead boolean"
 AGGS = {
     "sx": ("sum", "x"),
@@ -431,6 +433,28 @@ def test_minmax_fast_path_skips_source_entirely(spark, tmpdir):
     _upsert(spark, src, [(39, 3, None, 2, True)])  # group 3's max dies
     s4 = refresh_agg_view(spark, view)
     assert s4["minmax_recompute"], s4
+    assert _got(spark, view) == _expected(spark, src)
+
+
+def test_minmax_refresh_job_count(spark, tmpdir):
+    """An incremental min/max refresh reads its needy-group count from
+    the pin of the merged frame (observed, no job of its own), and the
+    feed it folds infers no schema and collects no delta keys for a
+    sidecar-less source: 9 jobs without a recompute and 18 with one
+    (15 and 24 with a limit(1).count() probe, the delta dir's schema
+    inferred and the delta keys collected)."""
+    src, view = f"{tmpdir}/src", f"{tmpdir}/view"
+    _mk_source(spark, src, n=40, groups=4)
+    create_agg_view(spark, src, view, ["g"], AGGS, src_tombstone_col="dead")
+    s: dict = {}
+    _upsert(spark, src, [(100, 1, 50.0, 1, False)])
+    jobs = jobs_launched(spark, lambda: s.update(refresh_agg_view(spark, view)))
+    assert s["mode"] == "incremental" and not s["minmax_recompute"], s
+    assert jobs <= 9, jobs
+    _upsert(spark, src, [(39, 3, None, 2, True)])  # group 3's max dies
+    jobs = jobs_launched(spark, lambda: s.update(refresh_agg_view(spark, view)))
+    assert s["mode"] == "incremental" and s["minmax_recompute"], s
+    assert jobs <= 18, jobs
     assert _got(spark, view) == _expected(spark, src)
 
 

@@ -819,7 +819,8 @@ def test_mor_read_job_count(spark, tmp_path, versioned):
     20-row base plus a 4-row delta with a NULL key and a tombstone
     collects in 3 jobs; with a distinct over the keys and a second
     pass (a NULL-key window, or a max-source aggregate joined back)
-    it took 5."""
+    it took 5. The writers record each data dir's schema, so even the
+    first read after the write infers nothing (one more job before)."""
     tgt = str(tmp_path / "t")
     write_manifest_table(
         spark,
@@ -836,14 +837,93 @@ def test_mor_read_job_count(spark, tmp_path, versioned):
         ),
         ["k"], **spec,
     )
-    # the first read infers the delta dir's schema once (one more job)
-    read_manifest_table(spark, tgt).collect()
     rows = []
     jobs = jobs_launched(
         spark, lambda: rows.extend(read_manifest_table(spark, tgt).collect())
     )
     assert len(rows) == 22, rows
     assert jobs <= 3, jobs
+
+
+@pytest.mark.parametrize("empty", [False, True])
+def test_written_dir_schema_matches_inferred_read(spark, tmp_path, empty):
+    """The schema a writer records for its ``_data`` dir equals a fresh
+    mergeSchema read of that dir — every field, array element and map
+    value nullable, field metadata kept — for the base version
+    ``write_manifest_table`` writes and the delta ``mor_upsert`` writes,
+    over decimal, timestamp, timestamp_ntz, date, binary, array<struct>
+    with non-null elements, map, nested struct and non-nullable columns,
+    on a populated and an empty frame."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType,
+        BinaryType,
+        DateType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampNTZType,
+        TimestampType,
+    )
+
+    from async_pipes_spark.sources.sinks import (
+        _DIR_SCHEMA_CACHE,
+        manifest_version,
+    )
+
+    schema = StructType([
+        StructField("k", LongType(), False, {"comment": "key"}),
+        StructField("d", DecimalType(12, 3)),
+        StructField("ts", TimestampType()),
+        StructField("ntz", TimestampNTZType(), False),
+        StructField("day", DateType()),
+        StructField("b", BinaryType()),
+        StructField(
+            "arr",
+            ArrayType(
+                StructType([
+                    StructField("x", LongType(), False),
+                    StructField("y", StringType()),
+                ]),
+                False,
+            ),
+            False,
+        ),
+        StructField("m", MapType(StringType(), DoubleType(), False)),
+        StructField("st", StructType([StructField("z", IntegerType(), False)]), False),
+    ])
+
+    def row(k):
+        return (
+            k, decimal.Decimal("1.250"), datetime.datetime(2020, 1, 1),
+            datetime.datetime(2020, 1, 2, 3), datetime.date(2020, 1, 3),
+            b"ab", [(k, "a")], {"q": 1.0}, (5,),
+        )
+
+    tgt = str(tmp_path / "t")
+    write_manifest_table(
+        spark, spark.createDataFrame([] if empty else [row(1), row(2)], schema), tgt
+    )
+    mor_upsert(
+        spark, tgt, spark.createDataFrame([] if empty else [row(2)], schema), ["k"]
+    )
+    dirs = [
+        f"{tgt}/_data/{d}"
+        for d in [manifest_version(spark, tgt)] + mor_deltas(spark, tgt)
+    ]
+    assert len(dirs) == 2, dirs
+    for d in dirs:
+        fresh = spark.read.option("mergeSchema", "true").parquet(d).schema
+        assert _DIR_SCHEMA_CACHE[d] == fresh, (d, _DIR_SCHEMA_CACHE[d], fresh)
+        assert _DIR_SCHEMA_CACHE[d]["k"].metadata == {"comment": "key"}
+    assert read_manifest_table(spark, tgt).count() == (0 if empty else 2)
 
 
 def test_mor_backlog_scan_prunes_base_files(spark, tmp_path):

@@ -7,7 +7,13 @@ job COUNT the load-immune proxy for lifecycle-query wall clock (r12
 verdict: the remaining IVM cost is job count, not data path). The
 query body runs under its own job group, and the jobs are read back
 through the public ``statusTracker().getJobIdsForGroup`` — exact, no
-sampling.
+sampling. A structured stream runs its micro-batches, and the jobs its
+``foreachBatch`` callback launches, under a job group of its own (the
+stream's run id), and every streaming query here starts its stream in
+a ``newSession()``, whose streams a listener on the query's session
+never sees. So the query also runs under a job tag, which the stream
+thread inherits from the thread that starts it, and the tagged jobs
+are the count; the query's own group gives the split.
 """
 
 from __future__ import annotations
@@ -48,9 +54,11 @@ def main() -> int:
         sc = spark.sparkContext
         group = f"job_count-{name}"
         sc.setJobGroup(group, name)
+        sc.addJobTag(group)
         t0 = time.perf_counter()
         rows = queries[name](spark, sf_dir).toPandas()
         wall = time.perf_counter() - t0
+        sc.removeJobTag(group)
         sc.setLocalProperty("spark.jobGroup.id", None)
         # a sentinel job in a second group: the status listener sees
         # events in order, so once it shows, every query job shows too
@@ -60,8 +68,13 @@ def main() -> int:
         tracker = sc.statusTracker()
         while not tracker.getJobIdsForGroup(f"{group}-sentinel"):
             time.sleep(0.05)
-        jobs = len(tracker.getJobIdsForGroup(group))
-        print(f"{name}: {wall:.2f}s wall, {jobs} jobs, {len(rows)} rows", flush=True)
+        own = len(tracker.getJobIdsForGroup(group))
+        jobs = len(sc._jsc.sc().statusTracker().getJobIdsForTag(group))
+        print(
+            f"{name}: {wall:.2f}s wall, {jobs} jobs ({jobs - own} in streams), "
+            f"{len(rows)} rows",
+            flush=True,
+        )
     finally:
         spark.stop()
     return 0
